@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from memories_spark.session import local_frame
+
 LINK_TYPES = {"supersedes", "related_to", "blocked_by", "caused_by", "reinforces"}
 
 
@@ -274,7 +276,7 @@ class MemoriesEngine:
             return self._links_live()
         d = self._dir(name)
         if not os.path.isdir(d):
-            return self.spark.createDataFrame([], _SCHEMAS[name])
+            return local_frame(self.spark, [], _SCHEMAS[name])
         if name == "memories":
             stored = T.StructType(
                 list(MEMORY_SCHEMA.fields) + [T.StructField(FOLDER_COL, T.StringType())]
@@ -298,7 +300,7 @@ class MemoriesEngine:
         d = self._dir("memories")
         startswith_src = F.col("source").startswith(source_prefix)
         if not os.path.isdir(d):
-            return self.spark.createDataFrame([], MEMORY_SCHEMA).filter(startswith_src)
+            return local_frame(self.spark, [], MEMORY_SCHEMA).filter(startswith_src)
         stored = T.StructType(
             list(MEMORY_SCHEMA.fields) + [T.StructField(FOLDER_COL, T.StringType())]
         )
@@ -951,7 +953,7 @@ class MemoriesEngine:
         self._migrate_legacy_links()
         log_dir = self._dir("links_log")
         if not os.path.isdir(log_dir):
-            return self.spark.createDataFrame([], LINK_LOG_SCHEMA)
+            return local_frame(self.spark, [], LINK_LOG_SCHEMA)
         log = self.spark.read.schema(LINK_LOG_SCHEMA).parquet(log_dir)
         return (
             log.groupBy("from_id", "to_id", "type")
@@ -1715,7 +1717,7 @@ class MemoriesEngine:
             list(MEMORY_SCHEMA.fields) + [T.StructField(FOLDER_COL, T.StringType())]
         )
         if not os.path.isdir(d):
-            df = self.spark.createDataFrame([], stored)
+            df = local_frame(self.spark, [], stored)
         else:
             df = self.spark.read.schema(stored).parquet(d)
             if folders is not None:

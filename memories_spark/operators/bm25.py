@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from memories_spark.functions.hashing import fixed_point, unfix
 from memories_spark.functions.texttools import tokens_expr
+from memories_spark.session import local_frame
 
 K1 = 1.5
 B = 0.75
@@ -163,7 +164,7 @@ def bm25_scores(
     stats = stats or build_term_stats(docs, id_col, text_col)
     terms, doc_stats, term_idf = stats["terms"], stats["doc_stats"], stats["term_idf"]
 
-    qdf = spark.createDataFrame([(t,) for t in query_terms], "term string")
+    qdf = local_frame(spark, [(t,) for t in query_terms], "term string")
     qcount = qdf.groupBy("term").agg(F.count("*").alias("qtf"))
 
     if "raw_idf" in stats:

@@ -31,10 +31,10 @@ it deterministic and oracle-expressible.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from memories_spark.session import local_frame
 
 ALPHA = 0.85
 ITERATIONS = 3
@@ -78,33 +78,31 @@ def personalized_pagerank(
     version just keeps it there between iterations instead of paying
     checkpoint + re-collect jobs. The ADJACENCY is never collected —
     it stays distributed and is the only thing that scales with the
-    corpus."""
-    spark = seeds.sparkSession
+    corpus.
 
-    # Small driver-local tables enter plans through the Arrow path
-    # (pandas -> LocalRelation): a plain createDataFrame(list)
-    # parallelizes into a PYTHON-evaluated RDD, so every reference —
-    # broadcast builds, tiny unions, each downstream consumer of the
-    # returned vector — would spawn Python worker tasks. The Arrow
-    # conversion yields a true LocalTableScan: JVM-only, zero tasks,
-    # broadcastable without a job, and exact (int64/float64 cross the
-    # boundary bit-for-bit).
-    def _local_df(rows: list, schema: str) -> DataFrame:
-        names = [f.split()[0] for f in schema.split(",")]
-        pdf = pd.DataFrame(rows, columns=names)
-        for name, typ in (f.split() for f in schema.split(",")):
-            pdf[name] = pdf[name].astype("int64" if typ == "long" else "float64")
-        return spark.createDataFrame(pdf, schema)
+    Caller contract: this operator is EAGER. Building its result runs
+    the seed collect plus one Spark action per iteration at call
+    time, and the returned frame is a driver-local LocalRelation. A
+    caller that only builds or explains a plan over it (for example
+    ``tools/explain_all.py``) therefore executes every iteration's
+    distributed job, and the plan it captures shows a post-execution
+    ``LocalTableScan`` in place of the PPR iterations — not the
+    distributed adjacency joins that produced it."""
+    spark = seeds.sparkSession
 
     # ONE job materializes the seed pipeline (it is tiny but its plan
     # may be a deep retrieval pipeline) and yields both the rows and —
     # as an exact integer sum, identical to F.sum over any
-    # partitioning — the seed mass.
-    seed_rows = seeds.select("id", "sw_fp").collect()
+    # partitioning — the seed mass. A NULL seed weight carries no
+    # mass (in ppr_sql it drops out of every sum), so its row is not a
+    # seed at all.
+    seed_rows = [
+        row for row in seeds.select("id", "sw_fp").collect() if row.sw_fp is not None
+    ]
     if s_total is None:
-        s_total = sum(row.sw_fp for row in seed_rows if row.sw_fp is not None)
+        s_total = sum(row.sw_fp for row in seed_rows)
     if not s_total:
-        return _local_df([], "id long, r_fp long")
+        return local_frame(spark, [], "id long, r_fp long")
 
     adj = bidirectional(edges).cache()
     deg = adj.groupBy("from_id").agg(F.count("*").alias("deg")).cache()
@@ -114,8 +112,8 @@ def personalized_pagerank(
     # time, so they cost no job and no collect; the expressions are
     # the previous in-plan ones verbatim (same F.round half-up, same
     # double division), so every constant is bit-identical.
-    seeds_local = _local_df(
-        [(int(row.id), int(row.sw_fp)) for row in seed_rows], "id long, sw_fp long"
+    seeds_local = local_frame(
+        spark, [(int(row.id), int(row.sw_fp)) for row in seed_rows], "id long, sw_fp long"
     )
     p = seeds_local.select(
         "id",
@@ -188,8 +186,8 @@ def personalized_pagerank(
             .agg(F.sum("term").alias("r_fp"))
             .collect()
         )
-        r = _local_df(
-            sorted((row.id, row.r_fp) for row in rows), "id long, r_fp long"
+        r = local_frame(
+            spark, sorted((row.id, row.r_fp) for row in rows), "id long, r_fp long"
         )
     # The final rank vector is a small driver-local leaf — like the
     # eager checkpoint it replaces, callers can reference it many

@@ -7,25 +7,57 @@ sum over signals, and the reference's weight-normalization algebra
 (memory_engine.py:1795-1807) rescales vector/bm25/recency weights so
 auxiliary signals (feedback, confidence) never exceed their budget.
 
-Spark shape: each signal is a ``(id, rank)`` DataFrame (ranks already
-deterministic via ``ORDER BY score DESC, id ASC``); fusion is a
-union → groupBy(id) → sum — one shuffle on id regardless of how many
-signals participate. At scale each signal list is already top-N
-truncated (the reference oversamples 3k, memory_engine.py:1752-1753),
-so the fused relation is tiny compared to the corpus.
+Spark shapes: when the signals are independent top-N lists, each is
+a ``(id, rank)`` DataFrame (ranks already deterministic via ``ORDER BY
+score DESC, id ASC``) and :func:`rrf_fuse` is a union → groupBy(id) →
+sum — one shuffle on id regardless of how many signals participate.
+When every signal is already a rank column of one shared candidate
+frame (the serving search's candidate sheet), :func:`rrf_score_expr`
+fuses them in a single projection. Both sum :func:`rrf_contrib`. At
+scale each signal list is already top-N truncated (the reference
+oversamples 3k, memory_engine.py:1752-1753), so the fused relation is
+tiny compared to the corpus.
 """
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from memories_spark.functions.hashing import fixed_point, unfix
 
 RRF_K = 60
 SCORE_SCALE = 12  # 1/(rank+60) needs more fixed-point digits
+
+
+def rrf_contrib(rank: Column, weight: float, rrf_k: int = RRF_K) -> Column:
+    """One signal's RRF contribution ``weight / (rank + rrf_k)`` as a
+    fixed-point BIGINT at ``SCORE_SCALE`` (NULL where ``rank`` is
+    NULL) — the one definition every fusion shape sums, so they agree
+    bit for bit."""
+    return fixed_point(
+        F.lit(float(weight)) / (rank + F.lit(rrf_k)).cast("double"), SCORE_SCALE
+    )
+
+
+def rrf_score_expr(
+    weighted_ranks: list[tuple[Column, float]], rrf_k: int = RRF_K
+) -> Column:
+    """Fused score of a row that carries every signal's rank as a
+    column: the exact integer sum of the present signals'
+    :func:`rrf_contrib` (an absent, NULL rank contributes 0). Equal to
+    :func:`rrf_fuse`'s grouped sum for the same ranks — integer
+    addition is order-free — but costs one projection instead of a
+    union and a shuffle, for callers whose signals already share one
+    candidate frame."""
+    total = reduce(
+        operator.add,
+        [F.coalesce(rrf_contrib(rank, w, rrf_k), F.lit(0)) for rank, w in weighted_ranks],
+    )
+    return unfix(total, SCORE_SCALE)
 
 
 def rank_signal(df: DataFrame, id_col: str, score_col: str, limit: int | None = None) -> DataFrame:
@@ -74,14 +106,10 @@ def rrf_fuse(
     parts = []
     for ordinal, name in enumerate(names):
         ranked, weight = signals[name]
-        contrib = fixed_point(
-            F.lit(float(weight)) / (F.col("rank") + F.lit(rrf_k)).cast("double"),
-            SCORE_SCALE,
-        )
         parts.append(
             ranked.select(
                 "id",
-                contrib.alias("c"),
+                rrf_contrib(F.col("rank"), weight, rrf_k).alias("c"),
                 F.col("rank").alias("rank"),
                 F.lit(ordinal).alias("_sig"),
             )

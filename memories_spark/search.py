@@ -6,11 +6,17 @@ re-expressed as one composable DataFrame plan over the engine's
 tables:
 
 1. query-intent rewrite (R13) — caller params always win;
-2. vector branch (R1/J2): broadcast query embedding × corpus scan;
-3. BM25 branch (R2): term-stats join;
-4. 5-signal RRF fusion (R3) with the reference weight algebra —
-   recency (R4), confidence (R5), feedback (R6) ranked within the
-   vector∪bm25 candidate set;
+2. vector branch (R1/J2): query embedding literal × corpus cosine
+   scan, cut to its top-3k;
+3. BM25 branch (R2): term-stats join (pruned postings when the
+   persisted lexical index is fresh), cut to its top-3k;
+4. the candidate sheet: the full outer join of the two top-3k lists
+   (at most 2·3·MAX_K = 600 rows whatever the corpus size), joined
+   once to the corpus snapshot with the candidate set broadcast. It
+   carries every signal as a column; recency (R4), confidence (R5)
+   and feedback (R6) ranks are row_number windows over it, and the
+   5-signal RRF score (R3, reference weight algebra) is one
+   projection summing the fixed-point contributions;
 5. temporal null-pass filter (F4), score threshold (F7),
    archived/pinned visibility (F2/F5), prefix auth (F1/F6);
 6. optional graph expansion (R7) + reserved-slot merge (R8);
@@ -25,7 +31,7 @@ from __future__ import annotations
 import re
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from memories_spark.engine import MemoriesEngine
@@ -49,12 +55,12 @@ def release_caches(df: DataFrame, blocking: bool = True) -> None:
     """Release the per-call cached/checkpointed storage blocks
     :func:`hybrid_search` attached to its result.
 
-    Every search call caches its query-specific intermediates (plus
-    an eager localCheckpoint on the graph path); without release, a
-    long-lived serving session accumulates storage blocks per query —
-    LRU eviction keeps results correct but evicts genuinely hot data
-    under pressure. Call this once the result is materialized
-    (``collect``/``toPandas``). It also releases the call's
+    A graph-path search holds an eager localCheckpoint, and
+    compositions (e.g. the fan-out merges) cache their merged result;
+    without release, a long-lived serving session accumulates storage
+    blocks per query — LRU eviction keeps results correct but evicts
+    genuinely hot data under pressure. Call this once the result is
+    materialized (``collect``/``toPandas``). It also releases the call's
     reference on the engine's corpus snapshot — after release,
     re-executing the plan is only guaranteed against an unmutated
     store (the snapshot may have been reclaimed; re-run the search
@@ -142,10 +148,14 @@ def hybrid_search(
     Serving discipline: the corpus snapshot is pinned ONCE on the
     engine (version-keyed eager localCheckpoint, shared by concurrent
     searches and immune to mutation-side cache invalidation — see
-    ``engine.serving_snapshot``); each call additionally caches its
-    query-specific intermediates (plus an eager checkpoint on the
-    graph path), all tracked on the returned DataFrame — call
-    :func:`release_caches` after materializing so a long-lived
+    ``engine.serving_snapshot``). The direct path caches nothing per
+    call: its candidate sheet is bounded at 600 rows, so the plan is
+    one pass over the sheet, 10–12 Spark jobs for an indexed
+    search, and its small driver-built inputs (query terms, empty
+    tables) are JVM LocalRelations, not Python RDDs. The graph path
+    adds one eager checkpoint of the direct rows. Call
+    :func:`release_caches` after materializing either way: it drops
+    the snapshot ref and any checkpoint blocks, so a long-lived
     session's executor storage stays flat.
     """
     now_dt = datetime.fromisoformat(now) if now else datetime(2024, 1, 1)
@@ -162,18 +172,12 @@ def hybrid_search(
         # graph_weight stays the caller's: intent never ENABLES graph
         # expansion on its own (reference memory_engine.py graph opt-in)
 
-    # per-call cache scope: every cache/checkpoint lands in these
-    # lists, attached to the returned DataFrame for release_caches()
-    _caches: list[DataFrame] = []
+    # per-call storage scope: the graph path's eager checkpoint lands
+    # here, attached to the returned DataFrame for release_caches()
     _ckpt_rdds: list = []
 
-    def _cache(df: DataFrame) -> DataFrame:
-        df = df.cache()
-        _caches.append(df)
-        return df
-
     def _finish(df: DataFrame) -> DataFrame:
-        df._ms_caches = tuple(_caches)
+        df._ms_caches = ()  # the search caches nothing per call
         df._ms_ckpt_rdds = tuple(_ckpt_rdds)
         # the snapshot ref this call holds; release_caches lets it go.
         # A BORROWED snapshot belongs to the caller (compositions like
@@ -226,7 +230,11 @@ def hybrid_search(
 
         # --- vector branch -------------------------------------------------
         qvec = [float(x) for x in embed_fn(query_text)]
+        sim = F.round(
+            cosine_expr(F.col("embedding"), F.array(*[F.lit(x) for x in qvec])), 6
+        )
         with_emb = mem.filter(F.col("embedding").isNotNull())
+        probed = None
         if ann:
             meta = engine.vector_index_meta()
             if meta is not None and mem_version is not None:
@@ -237,16 +245,11 @@ def hybrid_search(
             if meta is not None and len(qvec) == int(meta["dim"]):
                 # IVF-probed candidates: partition-pruned id scan,
                 # exact cosine only inside the probed cells
-                with_emb = with_emb.join(
-                    engine.vector_candidates(qvec, meta), "id", "left_semi"
-                )
-        vec_scored = _cache(with_emb.select(
-            "id",
-            F.round(
-                cosine_expr(F.col("embedding"), F.array(*[F.lit(x) for x in qvec])), 6
-            ).alias("sim"),
-        ))
-        vec_ranked = rrf_op.rank_signal(vec_scored, "id", "sim", limit=oversample)
+                probed = engine.vector_candidates(qvec, meta)
+                with_emb = with_emb.join(probed, "id", "left_semi")
+        vec_top = rrf_op.rank_signal(
+            with_emb.select("id", sim.alias("sim")), "id", "sim", limit=oversample
+        ).withColumnRenamed("rank", "vector_rank")
 
         # --- bm25 branch ---------------------------------------------------
         qterms = query_text.lower().split()
@@ -257,76 +260,102 @@ def hybrid_search(
             if lmeta is not None and int(lmeta["version"]) == mem_version:
                 bm_stats = engine.lexical_stats(qterms, meta=lmeta)
         bm = bm25_op.bm25_scores(mem, "id", "text", qterms, stats=bm_stats)
-        bm_ranked = rrf_op.rank_signal(bm, "id", "score", limit=oversample)
+        bm_top = rrf_op.rank_signal(
+            bm, "id", "score", limit=oversample
+        ).withColumnRenamed("rank", "bm25_rank")
 
-        cand = _cache(vec_ranked.select("id").union(bm_ranked.select("id")).distinct())
-        now_col = F.lit(str(now_dt)).cast("timestamp")
-
-        # --- aux signals over the candidate set ----------------------------
-        cmeta = cand.join(mem, "id")
-        recency_anchor = F.coalesce(F.col("document_at"), F.col("created_at"))
-        conf_anchor = F.coalesce(
-            F.col("last_reinforced_at"), F.col("updated_at"), F.col("created_at")
-        )
-        rec_scored = cmeta.select(
-            "id", half_life_decay(recency_anchor, now_col, RECENCY_HL_DAYS).alias("s")
-        )
-        conf_scored = cmeta.select(
-            "id", half_life_decay(conf_anchor, now_col, CONFIDENCE_HL_DAYS).alias("s")
-        )
+        # --- the candidate sheet -------------------------------------------
+        # One row per vector∪bm25 candidate — at most 2·3·MAX_K = 600
+        # rows whatever the corpus size — joined ONCE to the snapshot
+        # (candidate set broadcast), carrying every signal as a column.
+        # Each branch keeps its own top-3k position as its rank; the
+        # aux ranks are row_number windows over the sheet. The windows
+        # are unpartitioned, which the 600-row bound keeps safe at any
+        # scale: only the cosine scan and the postings read grow with
+        # the corpus.
+        cand = vec_top.join(bm_top, "id", "full_outer")
+        sheet = mem.join(F.broadcast(cand), "id")
+        if probed is not None:
+            # similarity stays NULL outside the probed cells, as the
+            # vector branch never scored those rows
+            in_probe = cand.select("id").join(probed, "id", "left_semi")
+            sheet = sheet.join(
+                in_probe.withColumn("_probed", F.lit(True)), "id", "left"
+            )
+            sim = F.when(F.col("_probed"), sim)
         fb = engine.feedback_net().filter(F.col("net") > 0)
-        fb_scored = cand.join(fb, cand.id == fb.memory_id).select("id", "net")
+        sheet = sheet.join(
+            fb.select(F.col("memory_id").alias("id"), "net"), "id", "left"
+        )
+
+        now_col = F.lit(str(now_dt)).cast("timestamp")
+        recency = half_life_decay(
+            F.coalesce(F.col("document_at"), F.col("created_at")),
+            now_col, RECENCY_HL_DAYS,
+        )
+        confidence = half_life_decay(
+            F.coalesce(
+                F.col("last_reinforced_at"), F.col("updated_at"), F.col("created_at")
+            ),
+            now_col, CONFIDENCE_HL_DAYS,
+        )
+
+        def capped_rank(score: Column) -> Column:
+            # rank over the sheet, capped at 3k (score desc, id asc —
+            # rank_signal's order; a NULL score sorts last)
+            rn = F.row_number().over(Window.orderBy(score.desc(), F.asc("id")))
+            return F.when(score.isNotNull() & (rn <= oversample), rn)
 
         w = _effective_weights(vector_weight, recency_weight, feedback_weight, confidence_weight)
-        fused = rrf_op.rrf_fuse(
-            {
-                "vector": (vec_ranked, w["vector"]),
-                "bm25": (bm_ranked, w["bm25"]),
-                "recency": (rrf_op.rank_signal(rec_scored, "id", "s", limit=oversample), w["recency"]),
-                "feedback": (rrf_op.rank_signal(fb_scored, "id", "net", limit=oversample), w["feedback"]),
-                "confidence": (rrf_op.rank_signal(conf_scored, "id", "s", limit=oversample), w["confidence"]),
-            }
+        ranked = sheet.select(
+            "id", "text", "source", "document_at", "created_at",
+            sim.alias("similarity"), "vector_rank", "bm25_rank",
+            capped_rank(recency).alias("recency_rank"),
+            # feedback ranks only candidates with net > 0
+            capped_rank(F.col("net")).alias("feedback_rank"),
+            capped_rank(confidence).alias("confidence_rank"),
+        )
+        ranked = ranked.withColumn(
+            "rrf_score",
+            rrf_op.rrf_score_expr([
+                (F.col(f"{name}_rank"), w[name])
+                for name in ("vector", "bm25", "recency", "feedback", "confidence")
+            ]),
         )
 
-        # --- temporal + threshold filters ----------------------------------
-        enriched = fused.join(mem.select("id", "text", "source", "document_at",
-                                         "created_at"), "id").join(
-            vec_scored.select("id", F.col("sim").alias("similarity")), "id", "left"
-        )
+        # --- temporal + threshold filters (after ranking) ------------------
         if since or until:
             anchor = F.coalesce(F.col("document_at"), F.col("created_at"))
-            enriched = temporal_filter(
-                enriched, anchor,
+            ranked = temporal_filter(
+                ranked, anchor,
                 since=str(since) if since else None,
                 until=str(until) if until else None,
             )
         if threshold is not None:
             # F7: sub-threshold similarity dropped (graph-only exempt below)
-            enriched = enriched.filter(
+            ranked = ranked.filter(
                 F.coalesce(F.col("similarity"), F.lit(-1.0)) >= threshold
             )
 
-        direct = _cache(enriched.select(
+        direct = ranked.select(
             "id", "text", "source", "rrf_score", "similarity",
             F.col("vector_rank").cast("long").alias("vector_rank"),
             F.col("bm25_rank").cast("long").alias("bm25_rank"),
-        ))
-
-        wtop = Window.orderBy(F.desc("rrf_score"), F.asc("id"))
+        )
 
         if graph_weight <= 0:
             return _finish(
-                direct.withColumn("rn", F.row_number().over(wtop))
-                .filter(F.col("rn") <= k)
-                .drop("rn")
-                .withColumn("match_type", F.lit("direct"))
+                direct.withColumn("match_type", F.lit("direct"))
                 .orderBy(F.desc("rrf_score"), F.asc("id"))
+                .limit(k)
             )
 
+        wtop = Window.orderBy(F.desc("rrf_score"), F.asc("id"))
+
         # --- graph expansion + reserved-slot merge (R7/R8) ------------------
-        # The fused plan is referenced ~5 more times below (seeds, merge,
-        # graph-only branch, scalars); truncate lineage so the final plan
-        # stays driver-printable (a cache alone keeps the logical tree).
+        # The sheet is referenced ~5 more times below (seeds, merge,
+        # graph-only branch, scalars): the eager checkpoint runs it once
+        # and truncates lineage so the final plan stays driver-printable.
         direct = direct.localCheckpoint(eager=True)
         try:
             # the checkpoint's storage blocks hang off the LogicalRDD —

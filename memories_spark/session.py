@@ -13,13 +13,19 @@ runs ``local[N]`` but every setting below is chosen to survive a
   floating timezone would silently shift decay math.
 - Arrow enabled for the few pandas-UDF paths (embedding transforms,
   multimodal decode stubs).
+
+:func:`local_frame` is the one way small driver-built rows (query
+terms, PPR rank vectors, empty-table frames) enter a plan.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -107,3 +113,26 @@ def get_spark(
         .config("spark.sql.streaming.stopTimeout", "60s")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: str | T.StructType
+) -> DataFrame:
+    """Small driver-local rows as a JVM ``LocalRelation``.
+
+    A plain ``createDataFrame(list)`` parallelizes into a
+    PYTHON-evaluated RDD, so every reference to it — broadcast builds,
+    tiny unions, each downstream consumer — spawns Python worker
+    tasks, and even an empty frame is an opaque RDD scan the optimizer
+    cannot prune. Handing Spark an Arrow table instead yields a true
+    ``LocalTableScan``: JVM-only, zero tasks, broadcastable without a
+    job, foldable by the optimizer (an empty one propagates through
+    joins), and exact (int64/float64 cross the boundary bit-for-bit).
+    This path needs no Arrow session config, so it holds on a vanilla
+    session too. ``rows`` are tuples in ``schema`` field order."""
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, row)) for row in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)

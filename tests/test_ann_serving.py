@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from memories_spark.engine import MemoriesEngine
 from memories_spark.extraction import mock_embed
 from memories_spark.operators import ann_index
-from memories_spark.search import hybrid_search
+from memories_spark.search import hybrid_search, release_caches
 
 NOW = "2024-06-01 12:00:00"
 LATER = "2024-06-02 12:00:00"
@@ -200,6 +200,59 @@ def test_probe_runs_zero_spark_jobs_after_warmup(store):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(cells) == 3
     assert list(sc.statusTracker().getJobIdsForGroup("probe-gate")) == []
+
+
+def _python_rdd_scans(plan) -> int:
+    """Scans of a Python-evaluated RDD (a ``createDataFrame(list)``
+    input) anywhere in a physical plan: through adaptive query
+    stages, cached relations and subqueries."""
+    name = plan.getClass().getSimpleName()
+    if name == "RDDScanExec":
+        return int("PythonRDD" in plan.rdd().toDebugString())
+    kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    kids += [plan.subqueries().apply(i) for i in range(plan.subqueries().size())]
+    if name == "AdaptiveSparkPlanExec":
+        kids.append(plan.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        kids.append(plan.plan())
+    elif name == "InMemoryTableScanExec":
+        kids.append(plan.relation().cachedPlan())
+    return sum(_python_rdd_scans(k) for k in kids)
+
+
+def test_indexed_search_serving_cost(spark, tmp_path):
+    """A warm indexed search is one candidate-sheet plan: at most 12
+    Spark jobs, no per-call caches, and no Python-evaluated input
+    anywhere in its plan (query terms and empty tables such as the
+    absent feedback log enter as JVM LocalRelations)."""
+    eng = MemoriesEngine(spark, str(tmp_path / "store"))
+    eng.add(_corpus(60), NOW)
+    eng.build_lexical_index()
+    sc = spark.sparkContext
+    query = "cache subsystem policy item"
+
+    def search():
+        return hybrid_search(eng, query, k=10, auto_intent=False, now=NOW,
+                             lexical=True, graph_weight=0)
+
+    for _ in range(2):  # warm the snapshot and the JIT
+        warm = search()
+        warm.collect()
+        release_caches(warm)
+    sc.setJobGroup("serving-cost", "one warm indexed search")
+    try:
+        df = search()
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup("serving-cost"))
+    try:
+        assert len(rows) == 10
+        assert len(jobs) <= 12, f"{len(jobs)} Spark jobs for one search"
+        assert df._ms_caches == ()
+        assert _python_rdd_scans(df._jdf.queryExecution().executedPlan()) == 0
+    finally:
+        release_caches(df)
 
 
 def _assign_snapshot(idx: str) -> dict[str, tuple]:

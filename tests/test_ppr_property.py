@@ -113,3 +113,26 @@ def test_ppr_matches_pure_python_model(spark, edges, seeds):
     got = {k: v for k, v in got.items() if v != 0}
     want = {k: v for k, v in want.items() if v != 0}
     assert got == want
+
+
+def test_ppr_null_seed_weight_carries_no_mass(spark):
+    """A seed row with a NULL weight is not a seed (in ppr_sql it
+    drops out of every sum): the vector equals the one computed
+    without that row, with or without a caller-supplied s_total."""
+    edges_df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 1)], "from_id long, to_id long"
+    )
+    seeds = [(1, 700_000_000_000), (3, 300_000_000_000)]
+    with_null = spark.createDataFrame(seeds + [(4, None)], "id long, sw_fp long")
+    without = spark.createDataFrame(seeds, "id long, sw_fp long")
+
+    def vec(df, **kw):
+        return sorted(
+            (int(r.id), int(r.r_fp))
+            for r in graph_op.personalized_pagerank(edges_df, df, **kw).collect()
+        )
+
+    want = vec(without)
+    assert want
+    assert vec(with_null) == want
+    assert vec(with_null, s_total=1_000_000_000_000) == want

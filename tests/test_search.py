@@ -276,6 +276,10 @@ def test_timeline_releases_all_variant_caches(spark, tmp_path):
     df = memory_timeline(eng, "deploys", k=5, auto_intent=False, now=NOW)
     df.collect()
     assert getattr(df, "_ms_snaps", None)
+    # the variant searches cache nothing per call: what release frees
+    # is their graph-path checkpoints and snapshot refs
+    assert df._ms_caches == ()
+    assert df._ms_ckpt_rdds
     release_caches(df)
     leaked = cached_ids() - before
     assert not leaked, f"timeline leaked storage blocks: {sorted(leaked)}"
@@ -445,6 +449,10 @@ def test_evidence_releases_everything(spark, tmp_path):
     df = memory_evidence(eng, "deploys", k=5, auto_intent=False, now=NOW)
     df.collect()
     assert getattr(df, "_ms_snaps", None)
+    # the search caches nothing per call: what release frees is its
+    # graph-path checkpoint and snapshot ref
+    assert df._ms_caches == ()
+    assert df._ms_ckpt_rdds
     release_caches(df)
     leaked = cached_ids() - before
     assert not leaked, f"memory_evidence leaked storage blocks: {sorted(leaked)}"
@@ -534,3 +542,167 @@ def test_hybrid_search_borrows_pinned_snapshot(spark, tmp_path):
         assert 3 in ids2
     finally:
         eng._release_snapshot(v)
+
+
+# --- candidate-sheet parity ----------------------------------------------
+
+
+def _reference_direct(
+    engine, query, k=8, vector_weight=0.7, recency_weight=0.0,
+    feedback_weight=0.1, confidence_weight=0.1, source_prefix=None,
+    since=None, until=None, threshold=None, include_archived=False,
+    ann=False, lexical=False,
+):
+    """The direct branch as five separate rank_signal lists fused by
+    rrf_fuse (union → groupBy) and re-joined to the corpus — the
+    composition hybrid_search's candidate sheet replaces. Returns the
+    ordered (id, rrf_score, similarity, vector_rank, bm25_rank,
+    match_type) rows."""
+    from pyspark.sql import functions as F
+
+    from memories_spark import search as S
+    from memories_spark.functions.decay import half_life_decay
+    from memories_spark.functions.vectors import cosine_expr
+    from memories_spark.operators import bm25 as bm25_op
+    from memories_spark.operators import rrf as rrf_op
+    from memories_spark.operators.temporal import temporal_filter
+
+    version, mem = engine.serving_snapshot()
+    try:
+        if source_prefix is not None:
+            mem = mem.filter(F.col("source").startswith(source_prefix))
+        if not include_archived:
+            mem = mem.filter(~F.coalesce(F.col("archived"), F.lit(False)))
+        oversample = 3 * k
+        qvec = [float(x) for x in mock_embed(query)]
+        with_emb = mem.filter(F.col("embedding").isNotNull())
+        if ann:
+            meta = engine.vector_index_meta()
+            if meta is not None and int(meta["version"]) == version:
+                with_emb = with_emb.join(
+                    engine.vector_candidates(qvec, meta), "id", "left_semi"
+                )
+        vec_scored = with_emb.select("id", F.round(
+            cosine_expr(F.col("embedding"), F.array(*[F.lit(x) for x in qvec])), 6
+        ).alias("sim"))
+        vec_ranked = rrf_op.rank_signal(vec_scored, "id", "sim", limit=oversample)
+        qterms = query.lower().split()
+        stats = None
+        if lexical and source_prefix is None and not include_archived:
+            lmeta = engine.lexical_index_meta()
+            if lmeta is not None and int(lmeta["version"]) == version:
+                stats = engine.lexical_stats(qterms, meta=lmeta)
+        bm = bm25_op.bm25_scores(mem, "id", "text", qterms, stats=stats)
+        bm_ranked = rrf_op.rank_signal(bm, "id", "score", limit=oversample)
+        cand = vec_ranked.select("id").union(bm_ranked.select("id")).distinct()
+        now_col = F.lit(NOW).cast("timestamp")
+        cmeta = cand.join(mem, "id")
+        rec = cmeta.select("id", half_life_decay(
+            F.coalesce(F.col("document_at"), F.col("created_at")),
+            now_col, S.RECENCY_HL_DAYS).alias("s"))
+        conf = cmeta.select("id", half_life_decay(
+            F.coalesce(F.col("last_reinforced_at"), F.col("updated_at"),
+                       F.col("created_at")),
+            now_col, S.CONFIDENCE_HL_DAYS).alias("s"))
+        fb = engine.feedback_net().filter(F.col("net") > 0)
+        fb_scored = cand.join(fb, cand.id == fb.memory_id).select("id", "net")
+        w = S._effective_weights(
+            vector_weight, recency_weight, feedback_weight, confidence_weight
+        )
+        fused = rrf_op.rrf_fuse({
+            "vector": (vec_ranked, w["vector"]),
+            "bm25": (bm_ranked, w["bm25"]),
+            "recency": (rrf_op.rank_signal(rec, "id", "s", limit=oversample),
+                        w["recency"]),
+            "feedback": (rrf_op.rank_signal(fb_scored, "id", "net", limit=oversample),
+                         w["feedback"]),
+            "confidence": (rrf_op.rank_signal(conf, "id", "s", limit=oversample),
+                           w["confidence"]),
+        })
+        enriched = fused.join(
+            mem.select("id", "document_at", "created_at"), "id"
+        ).join(vec_scored.select("id", F.col("sim").alias("similarity")), "id", "left")
+        if since or until:
+            enriched = temporal_filter(
+                enriched, F.coalesce(F.col("document_at"), F.col("created_at")),
+                since=since, until=until,
+            )
+        if threshold is not None:
+            enriched = enriched.filter(
+                F.coalesce(F.col("similarity"), F.lit(-1.0)) >= threshold
+            )
+        rows = enriched.orderBy(F.desc("rrf_score"), F.asc("id")).limit(k).collect()
+        return [(r.id, r.rrf_score, r.similarity, r.vector_rank, r.bm25_rank, "direct")
+                for r in rows]
+    finally:
+        engine._release_snapshot(version)
+
+
+_PARITY_WORDS = ["postgres", "cache", "deploy", "queue", "billing", "auth", "index"]
+
+
+@pytest.fixture(scope="module")
+def parity_store(spark, tmp_path_factory):
+    """40 memories over two ingest dates with varied document dates,
+    archived rows, rows without an embedding (BM25-only candidates),
+    mixed feedback, a fresh lexical index and a coarse IVF index whose
+    single probe leaves some candidates unscored."""
+    eng = MemoriesEngine(spark, str(tmp_path_factory.mktemp("parity") / "store"))
+    recs = []
+    for i in range(40):
+        a, b = _PARITY_WORDS[i % 7], _PARITY_WORDS[(i * 3 + 1) % 7]
+        text = f"{a} {b} note {i} tuning {a} step {i % 4}"
+        recs.append({
+            "text": text,
+            "source": f"{['proj/a', 'proj/b', 'misc'][i % 3]}/{i % 5}",
+            "embedding": None if i % 13 == 5 else mock_embed(text),
+            "document_at": None if i % 6 == 0 else f"2024-0{1 + i % 5}-1{i % 9} 08:00:00",
+            "archived": i % 11 == 3,
+        })
+    eng.add(recs[:20], "2024-02-01 09:00:00")
+    eng.add(recs[20:], NOW)
+    eng.build_lexical_index()
+    eng.build_vector_index(cells=4, nprobe=1)
+    for mid, signal in [(1, "useful"), (1, "useful"), (8, "useful"), (15, "useful"),
+                        (22, "useful"), (22, "not_useful"), (29, "not_useful"),
+                        (36, "useful")]:
+        eng.log_feedback(mid, signal, NOW)
+    return eng
+
+
+_PARITY_GRID = {
+    "inline": {},
+    "lexical": {"lexical": True},
+    "ann": {"ann": True},
+    "ann_lexical": {"ann": True, "lexical": True},
+    "prefix": {"source_prefix": "proj/", "lexical": True},
+    "archived": {"include_archived": True},
+    "threshold": {"threshold": 0.35, "lexical": True},
+    "since_until": {"since": "2024-02-01 00:00:00", "until": "2024-04-15 00:00:00"},
+    "recency": {"recency_weight": 0.4, "feedback_weight": 0.3},
+}
+
+
+@pytest.mark.parametrize("opts", list(_PARITY_GRID.values()), ids=list(_PARITY_GRID))
+def test_candidate_sheet_matches_fused_signal_lists(parity_store, opts):
+    """hybrid_search's one-sheet plan returns the same ordered rows,
+    scores, similarities and branch ranks as the five-list
+    rank_signal + rrf_fuse composition, across the option grid."""
+    from memories_spark.search import release_caches
+
+    for query in ("postgres cache tuning", "deploy queue auth step"):
+        df = hybrid_search(parity_store, query, k=8, auto_intent=False, now=NOW, **opts)
+        got = [(r.id, r.rrf_score, r.similarity, r.vector_rank, r.bm25_rank,
+                r.match_type) for r in df.collect()]
+        release_caches(df)
+        want = _reference_direct(parity_store, query, k=8, **opts)
+        assert got == want, (query, got, want)
+        assert got  # every grid point returns rows
+
+
+def test_candidate_sheet_matches_on_empty_store(spark, tmp_path):
+    eng = MemoriesEngine(spark, str(tmp_path / "empty"))
+    for opts in ({}, {"lexical": True}):
+        df = hybrid_search(eng, "anything at all", k=5, auto_intent=False, now=NOW, **opts)
+        assert df.collect() == []
+        assert _reference_direct(eng, "anything at all", k=5, **opts) == []
