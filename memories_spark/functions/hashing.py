@@ -17,6 +17,8 @@ aggregate in this repo dodges float-summation nondeterminism.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -74,6 +76,19 @@ def hex_frac_sql(hex_expr: str, ndigits: int = 13) -> str:
 def fixed_point(col: Column, scale: int) -> Column:
     """Deterministic-scalar double -> BIGINT at 10^scale (for exact sums)."""
     return F.round(col * F.lit(float(10**scale))).cast("long")
+
+
+def round_half_up(d: float) -> int:
+    """Driver-side twin of Spark's ``F.round(double)`` at scale 0 for
+    ``d >= 0`` (the fixed-point masses): HALF_UP on the exact binary
+    value. (Spark rounds a negative tie away from zero; this does not.)
+
+    ``floor(d + 0.5)`` is not the same function: the addition itself
+    rounds, so 0.49999999999999994 becomes 1 where Spark gives 0.
+    ``d - floor(d)`` is exact for every finite double, so comparing
+    it with 0.5 decides the tie on the value Spark sees."""
+    k = math.floor(d)
+    return k + (d - k >= 0.5)
 
 
 def fixed_point_sql(expr: str, scale: int) -> str:

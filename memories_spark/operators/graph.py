@@ -7,20 +7,15 @@ mass redistributed to the personalization vector. Adjacency is the
 ``related_to`` edge set made bidirectional with dangling targets
 dropped (memory_engine.py:1490-1508).
 
-Spark shape: a fixed-iteration loop of exactly ONE Spark job per
-iteration — the (cached) degree-annotated adjacency joins a broadcast
-of the current rank vector and the contributions aggregate by
-destination. The rank vector itself lives on the driver between
-iterations: it was ALWAYS driver-sized (every previous shape
-broadcast it into the edge join, and a broadcast collects to the
-driver first), so keeping it there removes the per-iteration
-checkpoint/aggregate jobs whose ~50 ms driver gaps dominated the
-query at bench scale (~27 sequential jobs → 5). All mass arithmetic
-stays in Catalyst expressions — the per-seed constants are evaluated
-by the optimizer over LocalRelations (ConvertToLocalRelation), the
-per-edge terms inside the one distributed job — so the result is
-bit-identical to the previous all-DataFrame shape regardless of
-partitioning or engine (see functions/hashing.py).
+Spark shape: PPR is seed-bounded. After ``t`` iterations mass sits
+only within ``t`` hops of a seed, so ONE Spark action collects the
+seed rows together with the adjacency "ball" — every edge leaving a
+node within ``iterations - 1`` hops of a seed — and the fixed-point
+iterations run on the driver over that ball, in the same double
+operand order and Spark ``round`` semantics as the oracle, with exact
+integer sums. The result is bit-identical to the distributed
+formulation regardless of partitioning or engine (see
+functions/hashing.py) and enters the plan as one LocalRelation.
 
 Clustering (reference find_similar_clusters union-find,
 memory_engine.py:2274-2342) is re-expressed as *bounded* min-label
@@ -31,9 +26,12 @@ it deterministic and oracle-expressible.
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from memories_spark.functions.hashing import round_half_up
 from memories_spark.session import local_frame
 
 ALPHA = 0.85
@@ -54,149 +52,106 @@ def personalized_pagerank(
     seeds: DataFrame,
     alpha: float = ALPHA,
     iterations: int = ITERATIONS,
-    s_total: int | None = None,
 ) -> DataFrame:
     """Fixed-point PPR. ``seeds`` is (id, sw_fp: BIGINT seed weight).
 
-    Returns (id, ppr_fp: BIGINT) — divide by 1e12 for the score.
+    Returns (id, r_fp: BIGINT) — divide by 1e12 for the score.
     The personalization p(v) = sw_fp(v) / sum(sw_fp) as a double;
-    each iteration term is rounded back to fixed-point before the
-    exact integer sum, so engines/partitionings agree bit-for-bit.
+    each iteration term is rounded half-up back to fixed point before
+    the exact integer sum, so engines/partitionings agree bit-for-bit.
+    A NULL seed weight carries no mass (in :func:`ppr_sql` it drops
+    out of every sum), so that row is not a seed at all. Empty or
+    all-zero seeds return an empty rank vector.
 
-    ``s_total`` (the seed-mass sum) may be passed in when the caller
-    already computed it — the serving path folds it into its single
-    sizing job — otherwise it is the exact integer sum of the (one)
-    seed-collect job's rows. Empty or all-zero seeds return an empty
-    rank vector without running a single iteration (no mass to spread
-    — and no driver crash on a NULL sum).
-
-    Scale envelope (unchanged from the all-DataFrame shape): the rank
-    vector — seeds plus the expanding frontier — must fit on the
-    driver. Every prior version already required this (the vector was
-    broadcast into the edge join each iteration, and a broadcast
-    relation is collected to the driver before shipping); this
-    version just keeps it there between iterations instead of paying
-    checkpoint + re-collect jobs. The ADJACENCY is never collected —
-    it stays distributed and is the only thing that scales with the
-    corpus.
+    Why the ball is enough: ``r_t`` is non-zero only within ``t`` hops
+    of a seed, and the iterations read ``r_0 … r_{iterations-1}``. The
+    edges leaving nodes within ``iterations - 1`` hops therefore hold
+    the complete out-degree of every node that can carry mass and every
+    destination mass can reach; a mass-carrying node with no ball edge
+    is dangling. Each hop level is a left-semi join of the adjacency
+    against the previous level's nodes, the small side broadcast.
 
     Caller contract: this operator is EAGER. Building its result runs
-    the seed collect plus one Spark action per iteration at call
-    time, and the returned frame is a driver-local LocalRelation. A
-    caller that only builds or explains a plan over it (for example
-    ``tools/explain_all.py``) therefore executes every iteration's
-    distributed job, and the plan it captures shows a post-execution
-    ``LocalTableScan`` in place of the PPR iterations — not the
-    distributed adjacency joins that produced it."""
+    ONE Spark action (the seed rows and the ball, as one tagged union)
+    at call time; the returned frame is a driver-local LocalRelation,
+    so referencing it many times re-runs nothing, and a plan built
+    over it (for example by ``tools/explain_all.py``) shows a
+    ``LocalTableScan`` where the PPR computation was. Nothing is
+    cached. The frame carries ``_ms_ball_edges``, the number of
+    adjacency edges collected: 0 means no seed touched an edge, so
+    no mass moved off the seeds.
+
+    Scale envelope: the driver holds the seeds' ``iterations - 1``-hop
+    edge ball next to the rank vector. For a seed set the size of a
+    search's candidate sheet that is a small neighbourhood whatever
+    the corpus size. When every node is a seed (``global_pagerank``)
+    the ball is the whole adjacency, the same order as the rank vector
+    the operator keeps on the driver in any case."""
     spark = seeds.sparkSession
+    adj = bidirectional(edges)
+    weighted = seeds.select("id", "sw_fp").filter(F.col("sw_fp").isNotNull())
 
-    # ONE job materializes the seed pipeline (it is tiny but its plan
-    # may be a deep retrieval pipeline) and yields both the rows and —
-    # as an exact integer sum, identical to F.sum over any
-    # partitioning — the seed mass. A NULL seed weight carries no
-    # mass (in ppr_sql it drops out of every sum), so its row is not a
-    # seed at all.
-    seed_rows = [
-        row for row in seeds.select("id", "sw_fp").collect() if row.sw_fp is not None
-    ]
-    if s_total is None:
-        s_total = sum(row.sw_fp for row in seed_rows)
+    def leaving(nodes: DataFrame) -> DataFrame:
+        return adj.join(F.broadcast(nodes), F.col("from_id") == F.col("id"), "left_semi")
+
+    nodes = weighted.select("id")
+    for _ in range(iterations - 1):
+        nodes = nodes.unionByName(leaving(nodes).select(F.col("to_id").alias("id")))
+    # ONE action: seed rows (edge=False, id, weight) and ball edges
+    # (edge=True, from, to) as one tagged union
+    tagged = weighted.select(
+        F.lit(False).alias("edge"), F.col("id").alias("a"), F.col("sw_fp").alias("b")
+    ).unionByName(
+        leaving(nodes).select(
+            F.lit(True).alias("edge"), F.col("from_id").alias("a"), F.col("to_id").alias("b")
+        )
+    )
+    rows = tagged.collect()
+    seed_rows, out = [], defaultdict(list)
+    for edge, a, b in rows:
+        if edge:
+            out[a].append(b)
+        else:
+            seed_rows.append((a, b))
+
+    r = _ppr_iterate(seed_rows, out, alpha, iterations)
+    frame = local_frame(spark, sorted(r), "id long, r_fp long")
+    frame._ms_ball_edges = len(rows) - len(seed_rows)
+    return frame
+
+
+def _ppr_iterate(
+    seed_rows: list[tuple[int, int]],
+    out: dict[int, list[int]],
+    alpha: float,
+    iterations: int,
+) -> list[tuple[int, int]]:
+    """The fixed-point iterations over the collected ball, term by
+    term the expressions of :func:`ppr_sql` (same double operand
+    order, Spark ``round`` half-up, exact integer sums). One entry per
+    seed row, so a duplicated seed contributes twice, as in SQL."""
+    s_total = sum(w for _, w in seed_rows)
     if not s_total:
-        return local_frame(spark, [], "id long, r_fp long")
-
-    adj = bidirectional(edges).cache()
-    deg = adj.groupBy("from_id").agg(F.count("*").alias("deg")).cache()
-
-    # p / r0 / base are lazy projections over the seed LocalRelation —
-    # ConvertToLocalRelation folds them driver-side at optimization
-    # time, so they cost no job and no collect; the expressions are
-    # the previous in-plan ones verbatim (same F.round half-up, same
-    # double division), so every constant is bit-identical.
-    seeds_local = local_frame(
-        spark, [(int(row.id), int(row.sw_fp)) for row in seed_rows], "id long, sw_fp long"
-    )
-    p = seeds_local.select(
-        "id",
-        (F.col("sw_fp").cast("double") / F.lit(float(s_total))).alias("p"),
-    )
-    base = p.select(
-        "id", F.round(F.lit(1.0 - alpha) * F.col("p") * _UNIT).cast("long").alias("term")
-    )
-    # r0 = p, in fixed point
-    r = p.select("id", F.round(F.col("p") * _UNIT).cast("long").alias("r_fp"))
-
-    for i in range(iterations):
-        # ONE action per iteration, with the exact plan algebra of the
-        # previous shape — (rank ⋈ deg) feeding contrib + the dangling
-        # scalar, base ∪ contrib ∪ dangling → groupBy(id) → exact
-        # integer sum — except the rank vector enters as a driver-local
-        # LocalRelation instead of a lazy checkpoint, whose
-        # construction-time stage materialization under AQE was the
-        # per-iteration job cascade (~27 sequential jobs with ~50 ms
-        # driver gaps). Term expressions unchanged: same operand
-        # order, same F.round, bit-identical longs. with_deg is
-        # referenced twice (contrib + dangling aggregate); both
-        # re-derive it from the local rank vector and the CACHED
-        # degree table, which replaces the old checkpoint.
-        with_deg = (
-            r.alias("r")
-            .join(deg.alias("d"), F.col("r.id") == F.col("d.from_id"), "left")
-            .select(
-                F.col("r.id").alias("id"),
-                F.col("r.r_fp").alias("r_fp"),
-                F.coalesce(F.col("d.deg"), F.lit(0)).alias("deg"),
-            )
-        )
-        contrib = (
-            adj.alias("a")
-            .join(
-                F.broadcast(with_deg.filter(F.col("deg") > 0)).alias("wd"),
-                F.col("wd.id") == F.col("a.from_id"),
-            )
-            .select(
-                F.col("a.to_id").alias("id"),
-                F.round(
-                    F.lit(alpha)
-                    * (F.col("wd.r_fp").cast("double") / _UNIT)
-                    / F.col("wd.deg")
-                    * _UNIT
-                )
-                .cast("long")
-                .alias("term"),
-            )
-        )
-        dang = with_deg.filter(F.col("deg") == 0).agg(
-            F.coalesce(F.sum("r_fp"), F.lit(0)).cast("long").alias("dang_fp")
-        )
-        dangling = p.crossJoin(F.broadcast(dang)).select(
-            "id",
-            F.round(
-                F.lit(alpha)
-                * (F.col("dang_fp").cast("double") / _UNIT)
-                * F.col("p")
-                * _UNIT
-            )
-            .cast("long")
-            .alias("term"),
-        )
-        rows = (
-            base.unionByName(contrib)
-            .unionByName(dangling)
-            .groupBy("id")
-            .agg(F.sum("term").alias("r_fp"))
-            .collect()
-        )
-        r = local_frame(
-            spark, sorted((row.id, row.r_fp) for row in rows), "id long, r_fp long"
-        )
-    # The final rank vector is a small driver-local leaf — like the
-    # eager checkpoint it replaces, callers can reference it many
-    # times (merge, scalars, graph-only branch) without re-running
-    # anything, and joins against it broadcast. Release the
-    # adjacency/degree caches — a long-lived session must not
-    # accumulate cached edge tables across searches.
-    adj.unpersist()
-    deg.unpersist()
+        return []
+    p = [(i, w / float(s_total)) for i, w in seed_rows]
+    base = [(i, round_half_up((1.0 - alpha) * pv * _UNIT)) for i, pv in p]
+    r = [(i, round_half_up(pv * _UNIT)) for i, pv in p]
+    for _ in range(iterations):
+        acc: dict[int, int] = defaultdict(int)
+        for i, term in base:
+            acc[i] += term
+        dang_fp = 0
+        for u, r_fp in r:
+            nbrs = out.get(u)
+            if not nbrs:
+                dang_fp += r_fp
+                continue
+            term = round_half_up(alpha * (r_fp / _UNIT) / len(nbrs) * _UNIT)
+            for v in nbrs:
+                acc[v] += term
+        for i, pv in p:
+            acc[i] += round_half_up(alpha * (dang_fp / _UNIT) * pv * _UNIT)
+        r = list(acc.items())
     return r
 
 

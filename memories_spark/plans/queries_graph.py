@@ -305,10 +305,10 @@ LIMIT 25
     "mass back to the uniform vector): every node seeds with equal "
     "weight, so the result ranks structural importance rather than "
     "query affinity — the corpus-wide 'hub documents' diagnostic. "
-    "Same fixed-point BIGINT mass arithmetic and per-iteration "
-    "plan shape (broadcast rank vector onto cached adjacency, one "
-    "shuffle per iteration) as ppr_graph_expand; one operator "
-    "serves both queries.",
+    "Same fixed-point BIGINT mass arithmetic and plan shape (one "
+    "collect of the seeds' 2-hop edge ball — here the whole "
+    "adjacency, since every node seeds — then the iterations on the "
+    "driver) as ppr_graph_expand; one operator serves both queries.",
     tags=("graph", "pagerank"),
 )
 def global_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

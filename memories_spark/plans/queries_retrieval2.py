@@ -529,8 +529,8 @@ def graph_merge_reserved(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             (F.lit(1.0) / (F.col("rank") + 60).cast("double")).alias("dscore"),
         )
-        # lazy: materialized by the PPR seed-sizing job right below —
-        # an eager job here would run back-to-back with it
+        # lazy: materialized by PPR's one seed-ball collect right
+        # below — an eager job here would run back-to-back with it
         .localCheckpoint(eager=False)
     )
     seeds = direct.select(

@@ -153,7 +153,8 @@ def hybrid_search(
     one pass over the sheet, 10–12 Spark jobs for an indexed
     search, and its small driver-built inputs (query terms, empty
     tables) are JVM LocalRelations, not Python RDDs. The graph path
-    adds one eager checkpoint of the direct rows. Call
+    adds one eager checkpoint of the direct rows and one collect of the
+    seeds' PPR edge ball (see ``graph.personalized_pagerank``). Call
     :func:`release_caches` after materializing either way: it drops
     the snapshot ref and any checkpoint blocks, so a long-lived
     session's executor storage stays flat.
@@ -373,18 +374,15 @@ def hybrid_search(
         seeds = direct.select(
             "id", F.round(F.col("rrf_score") * 1e12).cast("long").alias("sw_fp")
         ).filter(F.col("sw_fp") > 0)
-        # ONE sizing job for the whole graph stage (the round-3 verdict
-        # flagged three separate count jobs here): seed mass — which PPR
-        # needs anyway — and edge existence (limit(1), stops at the first
-        # edge) in a single action. The graph-only reserved-slot count is
-        # folded INTO the final plan below as a broadcast scalar, so it
-        # costs no extra driver action at all.
-        probe = (
-            seeds.agg(F.sum("sw_fp").alias("s_total"))
-            .crossJoin(edges.limit(1).agg(F.count("*").alias("has_edges")))
-            .first()
-        )
-        if not probe.has_edges or not probe.s_total:
+        # PPR is the graph stage's one driver action: it collects the
+        # seeds with their edge ball. An empty ball means no seed has
+        # an edge, so no mass moves, linked direct rows would gain
+        # +0.0 and the graph-only branch is empty — the merge would
+        # return exactly the direct top-k, so return that instead. The
+        # graph-only reserved-slot count is folded INTO the final plan
+        # below as a broadcast scalar, so it costs no action at all.
+        ppr = graph_op.personalized_pagerank(edges, seeds)
+        if not ppr._ms_ball_edges:
             return _finish(
                 direct.withColumn("rn", F.row_number().over(wtop))
                 .filter(F.col("rn") <= k)
@@ -393,7 +391,6 @@ def hybrid_search(
                 .orderBy(F.desc("rrf_score"), F.asc("id"))
             )
 
-        ppr = graph_op.personalized_pagerank(edges, seeds, s_total=int(probe.s_total))
         # "+graph" means the graph actually touched the row: PPR gives
         # every seed its own teleport mass, so require graph adjacency,
         # not just r_fp > 0 (reference graph_gain > 0 semantics,

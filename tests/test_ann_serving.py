@@ -255,6 +255,48 @@ def test_indexed_search_serving_cost(spark, tmp_path):
         release_caches(df)
 
 
+def test_graph_search_serving_cost(spark, tmp_path):
+    """A warm graph-path search (graph_weight > 0) over an indexed
+    store with links: the sheet checkpoint, ONE collect of PPR's seed
+    edge ball and the merge plan — at most 40 Spark jobs. It leaves no
+    persisted RDD behind once released, and no Python-evaluated input
+    in its plan (the rank vector is a JVM LocalRelation)."""
+    eng = MemoriesEngine(spark, str(tmp_path / "store"))
+    eng.add(_corpus(60), NOW)
+    eng.add_links([(i, (7 * i + 3) % 60, "related_to") for i in range(0, 60, 2)], NOW)
+    eng.build_lexical_index()
+    sc = spark.sparkContext
+    query = "cache subsystem policy item"
+
+    def search():
+        return hybrid_search(eng, query, k=10, auto_intent=False, now=NOW,
+                             lexical=True, graph_weight=0.2)
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    for _ in range(2):  # warm the snapshot and the JIT
+        warm = search()
+        warm.collect()
+        release_caches(warm)
+    before = persisted()
+    sc.setJobGroup("graph-serving-cost", "one warm graph search")
+    try:
+        df = search()
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup("graph-serving-cost"))
+    try:
+        assert len(rows) == 10
+        assert {r.match_type for r in rows} - {"direct"}  # the merge ran
+        assert len(jobs) <= 40, f"{len(jobs)} Spark jobs for one graph search"
+        assert _python_rdd_scans(df._jdf.queryExecution().executedPlan()) == 0
+    finally:
+        release_caches(df)
+    assert persisted() <= before
+
+
 def _assign_snapshot(idx: str) -> dict[str, tuple]:
     """part dir -> sorted (file, size, mtime) — byte-identity per
     folder. Resolves the ACTIVE generation each call (refresh

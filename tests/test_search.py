@@ -147,11 +147,12 @@ def test_empty_corpus(engine, spark, tmp_path):
 
 
 def test_graph_search_driver_actions_bounded(engine, monkeypatch):
-    """Round-3 verdict item 6: the graph stage sizes itself with ONE
-    eager driver action (seed mass + edge existence fused into one
-    first()), and the reserved-slot count is a broadcast scalar
-    inside the final plan — the pre-fix path ran three separate
-    count() actions (edges, seeds, gonly) per graph-enabled search."""
+    """Building a graph-path plan runs ONE driver action: PPR's
+    collect of the seeds and their edge ball, which also tells the
+    search whether any seed touched an edge. The reserved-slot count
+    is a broadcast scalar inside the final plan — an earlier path ran
+    three count() actions, a later one a sizing first() plus one
+    collect per PPR iteration."""
     DF = type(engine.table("memories"))
     calls = {"count": 0, "first": 0, "collect": 0}
     orig = {k: getattr(DF, k) for k in calls}
@@ -168,12 +169,55 @@ def test_graph_search_driver_actions_bounded(engine, monkeypatch):
     out = hybrid_search(engine, "postgres settings", k=3, graph_weight=0.1,
                         auto_intent=False, now=NOW)
     monkeypatch.undo()
-    assert calls["count"] == 0, calls
-    assert calls["first"] == 1, calls    # the fused sizing probe
-    assert calls["collect"] <= 1, calls  # first() delegates to collect
+    assert calls == {"count": 0, "first": 0, "collect": 1}, calls
     # and the plan still answers correctly
     rows = out.collect()
     assert len(rows) == 3
+
+
+def test_graph_search_without_ball_edges_equals_direct(spark, tmp_path, monkeypatch):
+    """Links that no seed reaches move no mass: the graph search
+    returns the direct-only top-k, and the merge plan it skips would
+    return the same rows (linked direct rows gain +0.0, the
+    graph-only branch is empty)."""
+    from memories_spark.operators import graph as graph_op
+
+    eng = MemoriesEngine(spark, str(tmp_path / "noball"))
+    words = ["one", "two", "three", "four", "five", "six", "seven", "eight"]
+    recs = [_rec(f"postgres settings tuning option number {w}", "db") for w in words]
+    recs += [_rec("frontend bundle size optimization", "web"),   # id 8
+             _rec("kafka topic retention window", "stream")]      # id 9
+    eng.add(recs, NOW)
+    eng.add_link(8, 9, "related_to", NOW)
+
+    balls = []
+    real = graph_op.personalized_pagerank
+
+    def spy(edges, seeds, **kw):
+        ppr = real(edges, seeds, **kw)
+        balls.append(ppr._ms_ball_edges)
+        return ppr
+
+    monkeypatch.setattr(graph_op, "personalized_pagerank", spy)
+
+    def search(graph_weight):
+        return [tuple(r) for r in hybrid_search(
+            eng, "postgres settings tuning option", k=1,
+            graph_weight=graph_weight, auto_intent=False, now=NOW,
+        ).collect()]
+
+    direct = search(0.0)
+    assert search(0.1) == direct
+    assert balls == [0]  # the link is outside every seed's ball
+
+    def forced(edges, seeds, **kw):  # run the full merge anyway
+        ppr = spy(edges, seeds, **kw)
+        ppr._ms_ball_edges = 1
+        return ppr
+
+    monkeypatch.setattr(graph_op, "personalized_pagerank", forced)
+    assert search(0.1) == direct
+    assert balls == [0, 0]
 
 
 # --- memory_timeline (reference mcp-server/index.js:262-330) -----------

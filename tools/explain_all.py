@@ -2,10 +2,10 @@
 
 Round dir from $PLANS_ROUND (default r09).
 
-Queries built over ``graph.personalized_pagerank`` run its iterations
-while the plan is BUILT (the operator is eager), so their captured
-plan shows the rank vector as a post-execution LocalTableScan, not
-the distributed PPR joins."""
+Queries built over ``graph.personalized_pagerank`` run its one
+seed-ball collect while the plan is BUILT (the operator is eager and
+iterates on the driver), so their captured plan shows the rank vector
+as a LocalTableScan, not the PPR computation."""
 import os, sys, time
 sys.path.insert(0, "/root/repo")
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
