@@ -469,8 +469,10 @@ class MemoriesEngine:
           with an age backstop reclaiming leaked refs after
           ``_SNAP_MAX_AGE`` further swaps.
 
-        Query-specific intermediates stay per-call (unique plans) and
-        are freed by ``search.release_caches``. The returned version
+        Searches persist nothing of their own: the graph path's
+        intermediates are collected to the driver, never cached or
+        checkpointed, so this snapshot is the only serving storage.
+        The returned version
         is what consumers must compare INDEX metas against — pairing
         the corpus snapshot with same-version indexes is what keeps a
         racing refresh from mixing new index stats with an old corpus

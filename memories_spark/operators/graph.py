@@ -63,6 +63,26 @@ def personalized_pagerank(
     out of every sum), so that row is not a seed at all. Empty or
     all-zero seeds return an empty rank vector.
 
+    Caller contract: this operator is EAGER. Building its result runs
+    :func:`collect_ppr`'s ONE Spark action at call time; the returned
+    frame is a driver-local LocalRelation, so referencing it many
+    times re-runs nothing, and a plan built over it (for example by
+    ``tools/explain_all.py``) shows a ``LocalTableScan`` where the PPR
+    computation was. Nothing is cached."""
+    ranks, _ = collect_ppr(edges, seeds, alpha, iterations)
+    return local_frame(seeds.sparkSession, sorted(ranks), "id long, r_fp long")
+
+
+def collect_ppr(
+    edges: DataFrame,
+    seeds: DataFrame,
+    alpha: float = ALPHA,
+    iterations: int = ITERATIONS,
+) -> tuple[list[tuple[int, int]], dict[int, list[int]]]:
+    """The driver half of :func:`personalized_pagerank`: returns the
+    rank vector ``[(id, r_fp)]`` and the edge ball it was computed
+    from, ``{from_id: [to_id, ...]}`` over ``bidirectional(edges)``.
+
     Why the ball is enough: ``r_t`` is non-zero only within ``t`` hops
     of a seed, and the iterations read ``r_0 … r_{iterations-1}``. The
     edges leaving nodes within ``iterations - 1`` hops therefore hold
@@ -70,16 +90,13 @@ def personalized_pagerank(
     destination mass can reach; a mass-carrying node with no ball edge
     is dangling. Each hop level is a left-semi join of the adjacency
     against the previous level's nodes, the small side broadcast.
+    The same argument makes the ball an exact adjacency test for every
+    node with ``r_fp > 0``: it has an edge iff it is an endpoint of a
+    ball edge.
 
-    Caller contract: this operator is EAGER. Building its result runs
-    ONE Spark action (the seed rows and the ball, as one tagged union)
-    at call time; the returned frame is a driver-local LocalRelation,
-    so referencing it many times re-runs nothing, and a plan built
-    over it (for example by ``tools/explain_all.py``) shows a
-    ``LocalTableScan`` where the PPR computation was. Nothing is
-    cached. The frame carries ``_ms_ball_edges``, the number of
-    adjacency edges collected: 0 means no seed touched an edge, so
-    no mass moved off the seeds.
+    Runs ONE Spark action (the seed rows and the ball, as one tagged
+    union); an empty ball means no seed touched an edge, so no mass
+    moved off the seeds.
 
     Scale envelope: the driver holds the seeds' ``iterations - 1``-hop
     edge ball next to the rank vector. For a seed set the size of a
@@ -87,7 +104,6 @@ def personalized_pagerank(
     the corpus size. When every node is a seed (``global_pagerank``)
     the ball is the whole adjacency, the same order as the rank vector
     the operator keeps on the driver in any case."""
-    spark = seeds.sparkSession
     adj = bidirectional(edges)
     weighted = seeds.select("id", "sw_fp").filter(F.col("sw_fp").isNotNull())
 
@@ -106,18 +122,13 @@ def personalized_pagerank(
             F.lit(True).alias("edge"), F.col("from_id").alias("a"), F.col("to_id").alias("b")
         )
     )
-    rows = tagged.collect()
-    seed_rows, out = [], defaultdict(list)
-    for edge, a, b in rows:
+    seed_rows, ball = [], defaultdict(list)
+    for edge, a, b in tagged.collect():
         if edge:
-            out[a].append(b)
+            ball[a].append(b)
         else:
             seed_rows.append((a, b))
-
-    r = _ppr_iterate(seed_rows, out, alpha, iterations)
-    frame = local_frame(spark, sorted(r), "id long, r_fp long")
-    frame._ms_ball_edges = len(rows) - len(seed_rows)
-    return frame
+    return _ppr_iterate(seed_rows, ball, alpha, iterations), dict(ball)
 
 
 def _ppr_iterate(

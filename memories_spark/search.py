@@ -37,12 +37,14 @@ from pyspark.sql import functions as F
 from memories_spark.engine import MemoriesEngine
 from memories_spark.extraction import mock_embed
 from memories_spark.functions.decay import half_life_decay
+from memories_spark.functions.hashing import round_half_up
 from memories_spark.functions.intent import apply_intent, classify_intent
 from memories_spark.functions.vectors import cosine_expr
 from memories_spark.operators import bm25 as bm25_op
 from memories_spark.operators import graph as graph_op
 from memories_spark.operators import rrf as rrf_op
 from memories_spark.operators.temporal import temporal_filter
+from memories_spark.session import local_frame
 
 RECENCY_HL_DAYS = 30.0   # reference R4 default half-life
 CONFIDENCE_HL_DAYS = 90.0  # reference R5 default
@@ -52,28 +54,18 @@ RESERVED_SLOTS = 2
 
 
 def release_caches(df: DataFrame, blocking: bool = True) -> None:
-    """Release the per-call cached/checkpointed storage blocks
-    :func:`hybrid_search` attached to its result.
+    """Release the corpus-snapshot references a serving result holds.
 
-    A graph-path search holds an eager localCheckpoint, and
-    compositions (e.g. the fan-out merges) cache their merged result;
-    without release, a long-lived serving session accumulates storage
-    blocks per query — LRU eviction keeps results correct but evicts
-    genuinely hot data under pressure. Call this once the result is
-    materialized (``collect``/``toPandas``). It also releases the call's
-    reference on the engine's corpus snapshot — after release,
-    re-executing the plan is only guaranteed against an unmutated
-    store (the snapshot may have been reclaimed; re-run the search
-    instead of re-collecting a released result). No-op on DataFrames
-    that did not come from ``hybrid_search``.
+    Every search and composition reads the engine's shared, pinned
+    snapshot and holds a reference on it; a search itself caches and
+    checkpoints nothing. Call this once the result is materialized
+    (``collect``/``toPandas``) so a displaced snapshot can be freed —
+    after release, re-executing the plan is only guaranteed against an
+    unmutated store (the snapshot may have been reclaimed; re-run the
+    search instead of re-collecting a released result). ``blocking``
+    has no effect: nothing is persisted per call. No-op on DataFrames
+    that did not come from ``hybrid_search`` or a composition over it.
     """
-    for cached in getattr(df, "_ms_caches", ()):
-        cached.unpersist(blocking)
-    for jrdd in getattr(df, "_ms_ckpt_rdds", ()):
-        try:
-            jrdd.unpersist(blocking)
-        except Exception:
-            pass  # JVM handle gone (session stopped) — nothing to free
     snaps = list(getattr(df, "_ms_snaps", ()) or ())
     snap = getattr(df, "_ms_snap", None)
     if snap is not None:
@@ -146,18 +138,19 @@ def hybrid_search(
     math).
 
     Serving discipline: the corpus snapshot is pinned ONCE on the
-    engine (version-keyed eager localCheckpoint, shared by concurrent
-    searches and immune to mutation-side cache invalidation — see
-    ``engine.serving_snapshot``). The direct path caches nothing per
-    call: its candidate sheet is bounded at 600 rows, so the plan is
-    one pass over the sheet, 10–12 Spark jobs for an indexed
-    search, and its small driver-built inputs (query terms, empty
-    tables) are JVM LocalRelations, not Python RDDs. The graph path
-    adds one eager checkpoint of the direct rows and one collect of the
-    seeds' PPR edge ball (see ``graph.personalized_pagerank``). Call
-    :func:`release_caches` after materializing either way: it drops
-    the snapshot ref and any checkpoint blocks, so a long-lived
-    session's executor storage stays flat.
+    engine (version-keyed, shared by concurrent searches and immune to
+    mutation-side cache invalidation — see
+    ``engine.serving_snapshot``). A search caches and checkpoints
+    nothing. The direct path is lazy: its candidate sheet is bounded
+    at 600 rows, so the plan is one pass over the sheet, 10–12 Spark
+    jobs for an indexed search, and its small driver-built inputs
+    (query terms, empty tables) are JVM LocalRelations, not Python
+    RDDs. The graph path runs two actions while the plan is built —
+    one collect of the direct rows and one of the seeds' PPR edge ball
+    (see ``graph.collect_ppr``) — merges on the driver, and returns
+    the <= k merged rows as a LocalRelation joined once to the
+    snapshot for (text, source). Call :func:`release_caches` after
+    materializing either way: it drops the snapshot ref.
     """
     now_dt = datetime.fromisoformat(now) if now else datetime(2024, 1, 1)
 
@@ -173,13 +166,7 @@ def hybrid_search(
         # graph_weight stays the caller's: intent never ENABLES graph
         # expansion on its own (reference memory_engine.py graph opt-in)
 
-    # per-call storage scope: the graph path's eager checkpoint lands
-    # here, attached to the returned DataFrame for release_caches()
-    _ckpt_rdds: list = []
-
     def _finish(df: DataFrame) -> DataFrame:
-        df._ms_caches = ()  # the search caches nothing per call
-        df._ms_ckpt_rdds = tuple(_ckpt_rdds)
         # the snapshot ref this call holds; release_caches lets it go.
         # A BORROWED snapshot belongs to the caller (compositions like
         # memory_timeline pin one version for every sub-search) — this
@@ -351,19 +338,20 @@ def hybrid_search(
                 .limit(k)
             )
 
-        wtop = Window.orderBy(F.desc("rrf_score"), F.asc("id"))
-
         # --- graph expansion + reserved-slot merge (R7/R8) ------------------
-        # The sheet is referenced ~5 more times below (seeds, merge,
-        # graph-only branch, scalars): the eager checkpoint runs it once
-        # and truncates lineage so the final plan stays driver-printable.
-        direct = direct.localCheckpoint(eager=True)
-        try:
-            # the checkpoint's storage blocks hang off the LogicalRDD —
-            # capture the JVM handle so release_caches() can free them
-            _ckpt_rdds.append(direct._jdf.queryExecution().analyzed().rdd())
-        except Exception:
-            pass  # plan-shape drift: blocks stay until session end
+        # The <= 600 direct rows, PPR's rank vector and its edge ball all
+        # fit on the driver, so the merge runs there over plain lists, as
+        # the reference's does (_merge_graph_results,
+        # memory_engine.py:1644-1723). Two actions: this collect and
+        # PPR's ball collect. Keep each double expression's operand
+        # order: tests compare the rows bit for bit with a Spark merge
+        # plan.
+        rows = direct.select(
+            "id", "rrf_score", "similarity", "vector_rank", "bm25_rank"
+        ).collect()
+        # seeds: sw_fp = F.round(rrf_score * 1e12), kept when > 0
+        seeds = [(r.id, round_half_up(r.rrf_score * 1e12)) for r in rows]
+        seeds = [s for s in seeds if s[1] > 0]
         edges = engine.table("links").filter(F.col("type") == "related_to")
         live = mem.select(F.col("id").alias("node_id"))
         edges = (
@@ -371,100 +359,58 @@ def hybrid_search(
             .join(live, edges.to_id == F.col("node_id"), "left_semi")
             .select("from_id", "to_id")
         )
-        seeds = direct.select(
-            "id", F.round(F.col("rrf_score") * 1e12).cast("long").alias("sw_fp")
-        ).filter(F.col("sw_fp") > 0)
-        # PPR is the graph stage's one driver action: it collects the
-        # seeds with their edge ball. An empty ball means no seed has
-        # an edge, so no mass moves, linked direct rows would gain
-        # +0.0 and the graph-only branch is empty — the merge would
-        # return exactly the direct top-k, so return that instead. The
-        # graph-only reserved-slot count is folded INTO the final plan
-        # below as a broadcast scalar, so it costs no action at all.
-        ppr = graph_op.personalized_pagerank(edges, seeds)
-        if not ppr._ms_ball_edges:
-            return _finish(
-                direct.withColumn("rn", F.row_number().over(wtop))
-                .filter(F.col("rn") <= k)
-                .drop("rn")
-                .withColumn("match_type", F.lit("direct"))
-                .orderBy(F.desc("rrf_score"), F.asc("id"))
-            )
-
+        ranks, ball = graph_op.collect_ppr(
+            edges, local_frame(engine.spark, seeds, "id long, sw_fp long")
+        )
+        r_fp = {i: f for i, f in ranks if f > 0}
         # "+graph" means the graph actually touched the row: PPR gives
         # every seed its own teleport mass, so require graph adjacency,
         # not just r_fp > 0 (reference graph_gain > 0 semantics,
-        # memory_engine.py:1627).
-        linked_nodes = graph_op.bidirectional(edges).select(
-            F.col("from_id").alias("id")
-        ).distinct()
-        scalars = ppr.agg(F.max("r_fp").cast("double").alias("max_ppr")).crossJoin(
-            direct.agg(F.max("rrf_score").alias("top_rrf"))
-        )
-        graph_term = (
-            F.lit(GRAPH_CAP)
-            * F.col("top_rrf")
-            * (F.coalesce(F.col("r_fp"), F.lit(0)).cast("double") / F.col("max_ppr"))
-        )
-        dmerged = (
-            direct.join(ppr.withColumnRenamed("id", "gid"), direct.id == F.col("gid"), "left")
-            .join(linked_nodes.withColumn("_linked", F.lit(True)), "id", "left")
-            .crossJoin(F.broadcast(scalars))
-            .select(
-                "id", "text", "source", "similarity", "vector_rank", "bm25_rank",
-                (F.col("rrf_score") + F.when(F.col("_linked"), graph_term).otherwise(F.lit(0.0))).alias("rrf_score"),
-                F.when(
-                    F.col("_linked") & (F.coalesce(F.col("r_fp"), F.lit(0)) > 0),
-                    "direct+graph",
-                )
-                .otherwise("direct")
-                .alias("match_type"),
-            )
-        )
+        # memory_engine.py:1627). A node with r_fp > 0 lies within
+        # ITERATIONS hops of a seed, so it has an edge iff it is an
+        # endpoint of a ball edge (see graph.collect_ppr).
+        linked = set(ball).union(*ball.values())
+        max_ppr = float(max(r_fp.values(), default=0))
+        top_rrf = max((r.rrf_score for r in rows), default=0.0)
 
-        gonly = (
-            ppr.filter(F.col("r_fp") > 0)
-            .join(direct.select("id"), "id", "left_anti")
-            .crossJoin(F.broadcast(scalars))
-            .join(mem.select("id", "text", "source"), "id")
-            .select(
-                "id", "text", "source",
-                F.lit(None).cast("double").alias("similarity"),
-                F.lit(None).cast("long").alias("vector_rank"),
-                F.lit(None).cast("long").alias("bm25_rank"),
-                graph_term.alias("rrf_score"),
-                F.lit("graph").alias("match_type"),
-            )
-        )
-        if threshold is not None:
-            # F7 carve-out: with a threshold set, graph-only hits
-            # (no similarity) are dropped (memory_engine.py:1707-1714)
-            gonly = gonly.filter(F.lit(False))
+        def graph_term(i: int) -> float:
+            return GRAPH_CAP * top_rrf * (float(r_fp[i]) / max_ppr)
 
-        # r = reserved slots actually fillable; unfilled slots return to
-        # the direct list (reference r = min(2, ...), :1670-1687).
-        # Computed LAZILY inside the final plan: gtop holds at most rmax
-        # rows, so r == count(gtop), carried as a broadcast 1-row scalar
-        # into the direct branch's rank filter — no count job on the
-        # driver (the reference does this elision at plan-build time for
-        # free; a count action per search was serving-latency overhead).
-        rmax = min(RESERVED_SLOTS, max(k - 1, 0))
-        gtop = gonly.withColumn("rn", F.row_number().over(wtop)).filter(
-            F.col("rn") <= rmax
-        ).drop("rn")
-        gcnt = gtop.agg(F.count("*").cast("int").alias("_gc"))
-        dtop = (
-            dmerged.withColumn("rn", F.row_number().over(wtop))
-            .crossJoin(F.broadcast(gcnt))
-            .filter(F.col("rn") <= F.lit(k) - F.col("_gc"))
-            .drop("rn", "_gc")
-        )
+        merged = []
+        for r in rows:
+            hit = r.id in r_fp and r.id in linked
+            merged.append((
+                r.id, r.rrf_score + graph_term(r.id) if hit else r.rrf_score,
+                r.similarity, r.vector_rank, r.bm25_rank,
+                "direct+graph" if hit else "direct",
+            ))
+        # F7 carve-out: with a threshold set, graph-only hits (no
+        # similarity) are dropped (memory_engine.py:1707-1714)
+        direct_ids = {r.id for r in rows}
+        gonly = [] if threshold is not None else [
+            (i, graph_term(i), None, None, None, "graph")
+            for i in r_fp if i not in direct_ids
+        ]
 
-        cols = ["id", "text", "source", "rrf_score", "similarity",
-                "vector_rank", "bm25_rank", "match_type"]
+        def top(xs: list, n: int) -> list:
+            return sorted(xs, key=lambda x: (-x[1], x[0]))[:n]
+
+        # reserved slots; unfilled ones return to the direct list
+        # (reference r = min(2, ...), :1670-1687)
+        gtop = top(gonly, min(RESERVED_SLOTS, k - 1))
+        picked = local_frame(
+            engine.spark, top(merged, k - len(gtop)) + gtop,
+            "id long, rrf_score double, similarity double, "
+            "vector_rank long, bm25_rank long, match_type string",
+        )
+        # every PPR node is live (edges are semi-joined to mem at both
+        # ends), so this inner join keeps every picked row; the limit
+        # drops nothing but plans the sort as one TakeOrderedAndProject
+        # instead of a range-partitioned global sort
         return _finish(
-            dtop.select(*cols)
-            .unionByName(gtop.select(*cols))
+            F.broadcast(picked).join(mem.select("id", "text", "source"), "id")
+            .select("id", "text", "source", "rrf_score", "similarity",
+                    "vector_rank", "bm25_rank", "match_type")
             .orderBy(F.desc("rrf_score"), F.asc("id"))
             .limit(k)
         )
@@ -556,12 +502,8 @@ def memory_timeline(
     field preference, index.js:153-155; our store folds its ``date``
     alias into ``document_at``). All variant searches share the
     engine's ONE corpus snapshot; call :func:`release_caches` on the
-    result to free every variant's per-call caches and snapshot refs
-    at once."""
+    result to release its snapshot ref."""
     variants = timeline_query_variants(query_text)
-    caches: list = []
-    ckpts: list = []
-    snaps: list = []
     frames: list[DataFrame] = []
     # Pin the anchor-date snapshot BEFORE the variant loop: taking a
     # second serving_snapshot() after the searches would let a mutation
@@ -570,7 +512,6 @@ def memory_timeline(
     # anchor_ts and silently sort first as unknown-date). The ref held
     # here keeps this version's blocks pinned for the whole call.
     mem_version, mem = engine.serving_snapshot()
-    snaps.append((engine, mem_version))
     try:
         for vi, variant in enumerate(variants):
             # every variant BORROWS the one pinned snapshot: hits and
@@ -586,8 +527,6 @@ def memory_timeline(
                 snapshot=(mem_version, mem),
                 **search_kwargs,
             )
-            caches.extend(getattr(df, "_ms_caches", ()))
-            ckpts.extend(getattr(df, "_ms_ckpt_rdds", ()))
             # per-variant rank = the reference's result-list order
             wv = Window.orderBy(F.desc("rrf_score"), F.asc("id"))
             frames.append(
@@ -638,21 +577,10 @@ def memory_timeline(
             "similarity", "match_type",
             user_fact_expr(F.col("text")).alias("user_fact"),
         ).orderBy("ord")
-        out._ms_caches = tuple(caches)
-        out._ms_ckpt_rdds = tuple(ckpts)
-        out._ms_snaps = tuple(snaps)
-        out._ms_snap = None
+        out._ms_snaps = ((engine, mem_version),)
         return out
     except BaseException:
-        for eng, version in snaps:
-            eng._release_snapshot(version)
-        for c in caches:
-            c.unpersist(False)
-        for jrdd in ckpts:
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass  # JVM handle gone (session stopped) — nothing to free
+        engine._release_snapshot(mem_version)
         raise
 
 
@@ -743,11 +671,7 @@ def memory_evidence(
     ``confidence: missing`` packet — follow-up suggestions are query-
     only either way: :func:`evidence_follow_ups`. Release with
     :func:`release_caches`."""
-    caches: list = []
-    ckpts: list = []
-    snaps: list = []
     mem_version, mem = engine.serving_snapshot()
-    snaps.append((engine, mem_version))
     try:
         # the search BORROWS the pinned snapshot: hits, ranks, and the
         # anchor/flags join below all read ONE corpus version
@@ -759,8 +683,6 @@ def memory_evidence(
             snapshot=(mem_version, mem),
             **search_kwargs,
         )
-        caches.extend(getattr(df, "_ms_caches", ()))
-        ckpts.extend(getattr(df, "_ms_ckpt_rdds", ()))
 
         # search result order = the reference's input list order (the
         # stable-sort tiebreak)
@@ -905,21 +827,10 @@ def memory_evidence(
             "archived", "relation", "packet_rank", "trail_rank",
             "confidence_level", "confidence_reasons",
         ).orderBy("rank")
-        result._ms_caches = tuple(caches)
-        result._ms_ckpt_rdds = tuple(ckpts)
-        result._ms_snaps = tuple(snaps)
-        result._ms_snap = None
+        result._ms_snaps = ((engine, mem_version),)
         return result
     except BaseException:
-        for eng, version in snaps:
-            eng._release_snapshot(version)
-        for c in caches:
-            c.unpersist(False)
-        for jrdd in ckpts:
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass  # JVM handle gone (session stopped) — nothing to free
+        engine._release_snapshot(mem_version)
         raise
 
 
@@ -1010,14 +921,10 @@ def _fanout_search_merge(
     SessionStart/SubagentStart recall fan-outs
     (memory-recall.sh:103-140, memory-subagent-recall.sh:77-110) are
     this shape — only the branch derivation differs."""
-    caches: list = []
-    ckpts: list = []
     snaps: list = []
 
     def _run(query: str, opts: dict, strategy: str, sidx: int) -> DataFrame:
         df = hybrid_search(engine, query, **opts, **search_kwargs)
-        caches.extend(getattr(df, "_ms_caches", ()))
-        ckpts.extend(getattr(df, "_ms_ckpt_rdds", ()))
         snap = getattr(df, "_ms_snap", None)
         if snap is not None:
             df._ms_snap = None  # ref transferred to the merged result
@@ -1052,20 +959,18 @@ def _fanout_search_merge(
             .drop("_rn", "sidx", "srank")
             .orderBy(score.desc(), F.asc("id"))
         )
-        # the merged result is <=cap rows; cache it so the emptiness
-        # probe below and the caller's collect share ONE execution of
-        # the multi-branch plan (released with everything else)
-        out = out.cache()
-        caches.append(out)
+        # the merged result is <= cap rows: ONE collect runs the
+        # multi-branch plan, tells whether it is empty, and the rows
+        # re-enter as a LocalRelation for the caller
+        rows = out.collect()
+        out = local_frame(engine.spark, rows, out.schema)
         # merge empty -> ONE fallback search (memory-query.sh:248-250,
         # memory-recall.sh:137-140, memory-subagent-recall.sh:107-110)
-        if not out.count():
+        if not rows:
             fb = hybrid_search(
                 engine, fb_query, k=fallback_k,
                 threshold=fallback_threshold, **search_kwargs,
             )
-            caches.extend(getattr(fb, "_ms_caches", ()))
-            ckpts.extend(getattr(fb, "_ms_ckpt_rdds", ()))
             snap = getattr(fb, "_ms_snap", None)
             if snap is not None:
                 fb._ms_snap = None
@@ -1074,21 +979,11 @@ def _fanout_search_merge(
                 "id", "text", "source", "rrf_score", "similarity",
                 "match_type",
             ).withColumn("strategy", F.lit("fallback"))
-        out._ms_caches = tuple(caches)
-        out._ms_ckpt_rdds = tuple(ckpts)
         out._ms_snaps = tuple(snaps)
-        out._ms_snap = None
         return out
     except BaseException:
         for eng, version in snaps:
             eng._release_snapshot(version)
-        for c in caches:
-            c.unpersist(False)
-        for jrdd in ckpts:
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass  # JVM handle gone (session stopped) — nothing to free
         raise
 
 

@@ -222,7 +222,7 @@ def _python_rdd_scans(plan) -> int:
 
 def test_indexed_search_serving_cost(spark, tmp_path):
     """A warm indexed search is one candidate-sheet plan: at most 12
-    Spark jobs, no per-call caches, and no Python-evaluated input
+    Spark jobs, no persisted RDD, and no Python-evaluated input
     anywhere in its plan (query terms and empty tables such as the
     absent feedback log enter as JVM LocalRelations)."""
     eng = MemoriesEngine(spark, str(tmp_path / "store"))
@@ -239,6 +239,7 @@ def test_indexed_search_serving_cost(spark, tmp_path):
         warm = search()
         warm.collect()
         release_caches(warm)
+    before = set(sc._jsc.getPersistentRDDs().keys())
     sc.setJobGroup("serving-cost", "one warm indexed search")
     try:
         df = search()
@@ -249,7 +250,7 @@ def test_indexed_search_serving_cost(spark, tmp_path):
     try:
         assert len(rows) == 10
         assert len(jobs) <= 12, f"{len(jobs)} Spark jobs for one search"
-        assert df._ms_caches == ()
+        assert set(sc._jsc.getPersistentRDDs().keys()) <= before
         assert _python_rdd_scans(df._jdf.queryExecution().executedPlan()) == 0
     finally:
         release_caches(df)
@@ -257,10 +258,11 @@ def test_indexed_search_serving_cost(spark, tmp_path):
 
 def test_graph_search_serving_cost(spark, tmp_path):
     """A warm graph-path search (graph_weight > 0) over an indexed
-    store with links: the sheet checkpoint, ONE collect of PPR's seed
-    edge ball and the merge plan — at most 40 Spark jobs. It leaves no
-    persisted RDD behind once released, and no Python-evaluated input
-    in its plan (the rank vector is a JVM LocalRelation)."""
+    store with links: one collect of the direct rows, ONE collect of
+    PPR's seed edge ball, and the <= k merged rows joined to the
+    snapshot — at most 21 Spark jobs. It persists no RDD, neither
+    during the call nor after release, and has no Python-evaluated
+    input in its plan (the merged rows are a JVM LocalRelation)."""
     eng = MemoriesEngine(spark, str(tmp_path / "store"))
     eng.add(_corpus(60), NOW)
     eng.add_links([(i, (7 * i + 3) % 60, "related_to") for i in range(0, 60, 2)], NOW)
@@ -290,7 +292,8 @@ def test_graph_search_serving_cost(spark, tmp_path):
     try:
         assert len(rows) == 10
         assert {r.match_type for r in rows} - {"direct"}  # the merge ran
-        assert len(jobs) <= 40, f"{len(jobs)} Spark jobs for one graph search"
+        assert len(jobs) <= 21, f"{len(jobs)} Spark jobs for one graph search"
+        assert persisted() <= before  # nothing persisted by the call
         assert _python_rdd_scans(df._jdf.queryExecution().executedPlan()) == 0
     finally:
         release_caches(df)

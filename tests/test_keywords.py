@@ -165,8 +165,9 @@ def test_dual_strategy_fallback_threshold_filters_noise(spark, tmp_path):
 
 
 def test_dual_strategy_releases_everything(spark, tmp_path):
-    """One release_caches on the merged result frees every branch's
-    caches and snapshot refs."""
+    """The fan-out persists no storage block (its merged rows are one
+    collect, not a cache), and one release_caches on the merged result
+    frees every branch's snapshot refs."""
     eng = MemoriesEngine(spark, str(tmp_path / "store"))
     eng.add([_rec(f"note {i} on retry backoff", "proj/a") for i in range(5)],
             NOW)
@@ -182,6 +183,8 @@ def test_dual_strategy_releases_everything(spark, tmp_path):
         threshold=None, auto_intent=False, now=NOW,
     )
     df.collect()
+    made = cached_ids() - before
+    assert not made, f"dual-strategy made blocks: {sorted(made)}"
     release_caches(df)
     leaked = cached_ids() - before
     assert not leaked, f"dual-strategy leaked blocks: {sorted(leaked)}"

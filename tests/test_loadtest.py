@@ -180,8 +180,9 @@ def test_serving_cache_invalidated_by_mutation(spark, tmp_path):
 
 
 def test_release_frees_graph_path_checkpoint(store):
-    """The graph path adds an eager localCheckpoint whose blocks live
-    OUTSIDE the cache manager; release_caches must free those too."""
+    """A graph-path search creates no storage blocks (it collects its
+    direct rows and edge ball, merges on the driver and checkpoints
+    nothing), and none appear after release_caches."""
     from memories_spark.search import hybrid_search, release_caches
 
     sc = store.spark.sparkContext
@@ -194,7 +195,8 @@ def test_release_frees_graph_path_checkpoint(store):
     df = hybrid_search(store, "service pattern requests", k=5,
                        auto_intent=False, now=NOW, graph_weight=0.2)
     df.collect()
-    assert cached_ids() - before  # the call did create storage blocks
+    made = cached_ids() - before
+    assert not made, f"graph-path search made blocks: {sorted(made)}"
     release_caches(df)
     leaked = cached_ids() - before
     assert not leaked, f"graph-path blocks leaked: {sorted(leaked)}"

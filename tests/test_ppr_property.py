@@ -264,11 +264,14 @@ def test_seed_bounded_ppr_matches_distributed(spark, edges, seeds):
     whole-adjacency distributed loop."""
     edges_df = _edges_df(spark, edges)
     seeds_df = local_frame(spark, sorted(seeds.items()), "id long, sw_fp long")
-    got = graph_op.personalized_pagerank(edges_df, seeds_df)
-    assert sorted((int(r.id), int(r.r_fp)) for r in got.collect()) == distributed_ppr(
-        edges_df, seeds_df
-    )
+    ranks, ball = graph_op.collect_ppr(edges_df, seeds_df)
+    assert sorted(ranks) == distributed_ppr(edges_df, seeds_df)
     # the ball is empty exactly when no weighted seed has an edge
     linked = {a for e in edges for a in e}
     touched = any(i in linked for i, w in seeds.items() if w is not None)
-    assert bool(got._ms_ball_edges) == touched
+    assert bool(ball) == touched
+    # every node with mass has an edge iff it is a ball endpoint
+    ends = set(ball).union(*ball.values())
+    assert {i for i, f in ranks if f > 0 and i in linked} == {
+        i for i, f in ranks if f > 0 and i in ends
+    }

@@ -147,14 +147,15 @@ def test_empty_corpus(engine, spark, tmp_path):
 
 
 def test_graph_search_driver_actions_bounded(engine, monkeypatch):
-    """Building a graph-path plan runs ONE driver action: PPR's
-    collect of the seeds and their edge ball, which also tells the
-    search whether any seed touched an edge. The reserved-slot count
-    is a broadcast scalar inside the final plan — an earlier path ran
-    three count() actions, a later one a sizing first() plus one
-    collect per PPR iteration."""
+    """Building a graph-path plan runs TWO driver actions and persists
+    nothing: one collect of the direct rows and PPR's collect of the
+    seeds and their edge ball; the merge then runs on the driver. An
+    earlier path ran three count() actions, a later one a sizing
+    first() plus one collect per PPR iteration, and another an eager
+    localCheckpoint of the candidate sheet."""
     DF = type(engine.table("memories"))
-    calls = {"count": 0, "first": 0, "collect": 0}
+    calls = {"count": 0, "first": 0, "collect": 0,
+             "localCheckpoint": 0, "cache": 0, "persist": 0}
     orig = {k: getattr(DF, k) for k in calls}
 
     def tracked(name):
@@ -163,13 +164,16 @@ def test_graph_search_driver_actions_bounded(engine, monkeypatch):
             return orig[name](self, *a, **kw)
         return wrap
 
+    # the shared snapshot is pinned once per table version, not per search
+    engine.serving_memories().count()
     for k in calls:
         monkeypatch.setattr(DF, k, tracked(k))
     # plan construction only — the result stays lazy
     out = hybrid_search(engine, "postgres settings", k=3, graph_weight=0.1,
                         auto_intent=False, now=NOW)
     monkeypatch.undo()
-    assert calls == {"count": 0, "first": 0, "collect": 1}, calls
+    assert calls == {"count": 0, "first": 0, "collect": 2,
+                     "localCheckpoint": 0, "cache": 0, "persist": 0}, calls
     # and the plan still answers correctly
     rows = out.collect()
     assert len(rows) == 3
@@ -177,9 +181,8 @@ def test_graph_search_driver_actions_bounded(engine, monkeypatch):
 
 def test_graph_search_without_ball_edges_equals_direct(spark, tmp_path, monkeypatch):
     """Links that no seed reaches move no mass: the graph search
-    returns the direct-only top-k, and the merge plan it skips would
-    return the same rows (linked direct rows gain +0.0, the
-    graph-only branch is empty)."""
+    returns the direct-only top-k (no row is linked, the graph-only
+    list is empty)."""
     from memories_spark.operators import graph as graph_op
 
     eng = MemoriesEngine(spark, str(tmp_path / "noball"))
@@ -191,14 +194,14 @@ def test_graph_search_without_ball_edges_equals_direct(spark, tmp_path, monkeypa
     eng.add_link(8, 9, "related_to", NOW)
 
     balls = []
-    real = graph_op.personalized_pagerank
+    real = graph_op.collect_ppr
 
     def spy(edges, seeds, **kw):
-        ppr = real(edges, seeds, **kw)
-        balls.append(ppr._ms_ball_edges)
-        return ppr
+        ranks, ball = real(edges, seeds, **kw)
+        balls.append(sum(len(v) for v in ball.values()))
+        return ranks, ball
 
-    monkeypatch.setattr(graph_op, "personalized_pagerank", spy)
+    monkeypatch.setattr(graph_op, "collect_ppr", spy)
 
     def search(graph_weight):
         return [tuple(r) for r in hybrid_search(
@@ -209,15 +212,6 @@ def test_graph_search_without_ball_edges_equals_direct(spark, tmp_path, monkeypa
     direct = search(0.0)
     assert search(0.1) == direct
     assert balls == [0]  # the link is outside every seed's ball
-
-    def forced(edges, seeds, **kw):  # run the full merge anyway
-        ppr = spy(edges, seeds, **kw)
-        ppr._ms_ball_edges = 1
-        return ppr
-
-    monkeypatch.setattr(graph_op, "personalized_pagerank", forced)
-    assert search(0.1) == direct
-    assert balls == [0, 0]
 
 
 # --- memory_timeline (reference mcp-server/index.js:262-330) -----------
@@ -302,10 +296,9 @@ def test_timeline_user_facts_only_filter(spark, tmp_path):
 
 
 def test_timeline_releases_all_variant_caches(spark, tmp_path):
-    """memory_timeline runs one hybrid_search PER VARIANT; a single
-    release_caches on the merged result must free every variant's
-    per-call caches and snapshot refs (storage stays flat, snapshot
-    refcount returns to zero)."""
+    """memory_timeline runs one graph-path hybrid_search PER VARIANT;
+    none of them persists a storage block, and a single release_caches
+    on the merged result returns the snapshot refcount to zero."""
     from memories_spark.search import memory_timeline, release_caches
 
     eng = MemoriesEngine(spark, str(tmp_path / "rstore"))
@@ -320,10 +313,8 @@ def test_timeline_releases_all_variant_caches(spark, tmp_path):
     df = memory_timeline(eng, "deploys", k=5, auto_intent=False, now=NOW)
     df.collect()
     assert getattr(df, "_ms_snaps", None)
-    # the variant searches cache nothing per call: what release frees
-    # is their graph-path checkpoints and snapshot refs
-    assert df._ms_caches == ()
-    assert df._ms_ckpt_rdds
+    made = cached_ids() - before
+    assert not made, f"timeline made storage blocks: {sorted(made)}"
     release_caches(df)
     leaked = cached_ids() - before
     assert not leaked, f"timeline leaked storage blocks: {sorted(leaked)}"
@@ -476,9 +467,9 @@ def test_evidence_packet_caps(spark, tmp_path):
 
 
 def test_evidence_releases_everything(spark, tmp_path):
-    """One release_caches on the packet result frees the search's
-    caches and BOTH snapshot refs (the pre-search pin + the search's
-    own)."""
+    """The packet's graph-path search persists no storage block, and
+    one release_caches on the packet result returns the snapshot
+    refcount to zero (the search borrows the pre-search pin)."""
     from memories_spark.search import memory_evidence, release_caches
 
     eng = MemoriesEngine(spark, str(tmp_path / "lstore"))
@@ -493,10 +484,8 @@ def test_evidence_releases_everything(spark, tmp_path):
     df = memory_evidence(eng, "deploys", k=5, auto_intent=False, now=NOW)
     df.collect()
     assert getattr(df, "_ms_snaps", None)
-    # the search caches nothing per call: what release frees is its
-    # graph-path checkpoint and snapshot ref
-    assert df._ms_caches == ()
-    assert df._ms_ckpt_rdds
+    made = cached_ids() - before
+    assert not made, f"memory_evidence made storage blocks: {sorted(made)}"
     release_caches(df)
     leaked = cached_ids() - before
     assert not leaked, f"memory_evidence leaked storage blocks: {sorted(leaked)}"
@@ -595,13 +584,14 @@ def _reference_direct(
     engine, query, k=8, vector_weight=0.7, recency_weight=0.0,
     feedback_weight=0.1, confidence_weight=0.1, source_prefix=None,
     since=None, until=None, threshold=None, include_archived=False,
-    ann=False, lexical=False,
+    ann=False, lexical=False, finish=None,
 ):
     """The direct branch as five separate rank_signal lists fused by
     rrf_fuse (union → groupBy) and re-joined to the corpus — the
     composition hybrid_search's candidate sheet replaces. Returns the
     ordered (id, rrf_score, similarity, vector_rank, bm25_rank,
-    match_type) rows."""
+    match_type) rows, or ``finish(direct, mem, k, threshold)`` over the
+    unlimited direct rows when given."""
     from pyspark.sql import functions as F
 
     from memories_spark import search as S
@@ -664,7 +654,7 @@ def _reference_direct(
                            w["confidence"]),
         })
         enriched = fused.join(
-            mem.select("id", "document_at", "created_at"), "id"
+            mem.select("id", "text", "source", "document_at", "created_at"), "id"
         ).join(vec_scored.select("id", F.col("sim").alias("similarity")), "id", "left")
         if since or until:
             enriched = temporal_filter(
@@ -675,6 +665,8 @@ def _reference_direct(
             enriched = enriched.filter(
                 F.coalesce(F.col("similarity"), F.lit(-1.0)) >= threshold
             )
+        if finish is not None:
+            return finish(enriched, mem, k, threshold)
         rows = enriched.orderBy(F.desc("rrf_score"), F.asc("id")).limit(k).collect()
         return [(r.id, r.rrf_score, r.similarity, r.vector_rank, r.bm25_rank, "direct")
                 for r in rows]
@@ -750,3 +742,185 @@ def test_candidate_sheet_matches_on_empty_store(spark, tmp_path):
         df = hybrid_search(eng, "anything at all", k=5, auto_intent=False, now=NOW, **opts)
         assert df.collect() == []
         assert _reference_direct(eng, "anything at all", k=5, **opts) == []
+
+
+# --- graph-path merge parity ----------------------------------------------
+
+
+def _reference_graph_merge(engine):
+    """The Spark merge plan the driver-side graph merge replaced, as a
+    ``_reference_direct`` finish: PPR as a frame, ``linked_nodes`` over
+    the whole live adjacency, broadcast scalars, and the reserved-slot
+    split counted inside the plan. Returns ordered (id, text, source,
+    rrf_score, similarity, vector_rank, bm25_rank, match_type) rows."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from memories_spark import search as S
+    from memories_spark.operators import graph as graph_op
+    from memories_spark.session import local_frame
+
+    cols = ["id", "text", "source", "rrf_score", "similarity",
+            "vector_rank", "bm25_rank", "match_type"]
+
+    def finish(enriched, mem, k, threshold):
+        # the direct rows enter lineage-free, as the old checkpoint did
+        direct = local_frame(
+            mem.sparkSession,
+            [tuple(r) for r in enriched.select(*cols[:-1]).collect()],
+            "id long, text string, source string, rrf_score double, "
+            "similarity double, vector_rank long, bm25_rank long",
+        )
+        wtop = Window.orderBy(F.desc("rrf_score"), F.asc("id"))
+        edges = engine.table("links").filter(F.col("type") == "related_to")
+        live = mem.select(F.col("id").alias("node_id"))
+        edges = (
+            edges.join(live, edges.from_id == live.node_id, "left_semi")
+            .join(live, edges.to_id == F.col("node_id"), "left_semi")
+            .select("from_id", "to_id")
+        )
+        seeds = direct.select(
+            "id", F.round(F.col("rrf_score") * 1e12).cast("long").alias("sw_fp")
+        ).filter(F.col("sw_fp") > 0)
+        ppr = graph_op.personalized_pagerank(edges, seeds)
+        if not ppr.collect():  # no seed: the direct top-k
+            out = direct.withColumn("match_type", F.lit("direct"))
+            return [tuple(r) for r in out.select(*cols).orderBy(
+                F.desc("rrf_score"), F.asc("id")).limit(k).collect()]
+        linked_nodes = graph_op.bidirectional(edges).select(
+            F.col("from_id").alias("id")
+        ).distinct()
+        scalars = ppr.agg(F.max("r_fp").cast("double").alias("max_ppr")).crossJoin(
+            direct.agg(F.max("rrf_score").alias("top_rrf"))
+        )
+        graph_term = (
+            F.lit(S.GRAPH_CAP)
+            * F.col("top_rrf")
+            * (F.coalesce(F.col("r_fp"), F.lit(0)).cast("double") / F.col("max_ppr"))
+        )
+        dmerged = (
+            direct.join(ppr.withColumnRenamed("id", "gid"), direct.id == F.col("gid"), "left")
+            .join(linked_nodes.withColumn("_linked", F.lit(True)), "id", "left")
+            .crossJoin(F.broadcast(scalars))
+            .select(
+                "id", "text", "source", "similarity", "vector_rank", "bm25_rank",
+                (F.col("rrf_score") + F.when(F.col("_linked"), graph_term)
+                 .otherwise(F.lit(0.0))).alias("rrf_score"),
+                F.when(F.col("_linked") & (F.coalesce(F.col("r_fp"), F.lit(0)) > 0),
+                       "direct+graph").otherwise("direct").alias("match_type"),
+            )
+        )
+        gonly = (
+            ppr.filter(F.col("r_fp") > 0)
+            .join(direct.select("id"), "id", "left_anti")
+            .crossJoin(F.broadcast(scalars))
+            .join(mem.select("id", "text", "source"), "id")
+            .select(
+                "id", "text", "source",
+                F.lit(None).cast("double").alias("similarity"),
+                F.lit(None).cast("long").alias("vector_rank"),
+                F.lit(None).cast("long").alias("bm25_rank"),
+                graph_term.alias("rrf_score"),
+                F.lit("graph").alias("match_type"),
+            )
+        )
+        if threshold is not None:
+            gonly = gonly.filter(F.lit(False))
+        rmax = min(S.RESERVED_SLOTS, max(k - 1, 0))
+        gtop = gonly.withColumn("rn", F.row_number().over(wtop)).filter(
+            F.col("rn") <= rmax
+        ).drop("rn")
+        gcnt = gtop.agg(F.count("*").cast("int").alias("_gc"))
+        dtop = (
+            dmerged.withColumn("rn", F.row_number().over(wtop))
+            .crossJoin(F.broadcast(gcnt))
+            .filter(F.col("rn") <= F.lit(k) - F.col("_gc"))
+            .drop("rn", "_gc")
+        )
+        out = (
+            dtop.select(*cols).unionByName(gtop.select(*cols))
+            .orderBy(F.desc("rrf_score"), F.asc("id")).limit(k)
+        )
+        return [tuple(r) for r in out.collect()]
+
+    return finish
+
+
+@pytest.fixture(scope="module")
+def graph_store(spark, tmp_path_factory):
+    """36 memories with 14 related_to links, some rows without an
+    embedding, archived rows, feedback and a fresh lexical index. Rows
+    32–35 are a chain seed(32) – 33 – 34 – 35 for the "zebra quartz"
+    query: 33 and 34 are no candidates, and 35 has no embedding, so
+    with vector_weight 1.0 it is a direct row with rrf_score 0 (no
+    seed) exactly 3 hops from the seed."""
+    eng = MemoriesEngine(spark, str(tmp_path_factory.mktemp("graph") / "store"))
+    recs = []
+    for i in range(32):
+        a, b = _PARITY_WORDS[i % 7], _PARITY_WORDS[(i * 3 + 1) % 7]
+        text = f"{a} {b} note {i} tuning {a} step {i % 4}"
+        recs.append({
+            "text": text,
+            "source": f"{['proj/a', 'proj/b', 'misc'][i % 3]}/{i % 5}",
+            "embedding": None if i % 9 == 4 else mock_embed(text),
+            "document_at": None if i % 6 == 0 else f"2024-0{1 + i % 5}-1{i % 9} 08:00:00",
+            "archived": i % 11 == 3,
+        })
+    recs += [
+        _rec("zebra quartz anchor", "misc/z"),                            # 32
+        {"text": "filler paragraph one", "source": "misc/z"},           # 33
+        {"text": "filler paragraph two", "source": "misc/z"},           # 34
+        {"text": "zebra quartz tail end", "source": "misc/z"},          # 35
+    ]
+    eng.add(recs[:16], "2024-02-01 09:00:00")
+    eng.add(recs[16:], NOW)
+    eng.add_links(
+        [(i, (5 * i + 2) % 32, "related_to") for i in range(0, 32, 3)]
+        + [(32, 33, "related_to"), (33, 34, "related_to"), (34, 35, "related_to")],
+        NOW,
+    )
+    eng.build_lexical_index()
+    for mid, signal in [(1, "useful"), (8, "useful"), (22, "not_useful")]:
+        eng.log_feedback(mid, signal, NOW)
+    return eng
+
+
+_GRAPH_GRID = {
+    "lexical": {"k": 8, "graph_weight": 0.2, "lexical": True},
+    "k1": {"k": 1, "graph_weight": 0.3},
+    "k3_recency": {"k": 3, "graph_weight": 0.1, "recency_weight": 0.4},
+    "all_candidates": {"k": 20, "graph_weight": 0.2},
+    "threshold": {"k": 8, "graph_weight": 0.2, "threshold": 0.3},
+    "prefix": {"k": 8, "graph_weight": 0.2, "source_prefix": "proj/"},
+    "since_archived": {"k": 8, "graph_weight": 0.2, "since": "2024-02-01 00:00:00",
+                       "include_archived": True},
+    "vector_only": {"k": 40, "graph_weight": 0.2, "vector_weight": 1.0,
+                    "feedback_weight": 0.0, "confidence_weight": 0.0},
+}
+
+
+@pytest.mark.parametrize("opts", list(_GRAPH_GRID.values()), ids=list(_GRAPH_GRID))
+def test_graph_merge_matches_spark_merge_plan(graph_store, opts):
+    """The driver-side graph merge returns the same ordered rows, bit
+    for bit, as the Spark merge plan it replaced, across the option
+    grid: dangling seeds, k=1 (no reserved slot), fewer graph-only
+    hits than reserved slots, the threshold carve-out, a source
+    prefix, and a zero-weight direct row linked only through a ball
+    edge's to_id."""
+    from memories_spark.search import release_caches
+
+    seen = set()
+    for query in ("postgres cache tuning", "zebra quartz"):
+        df = hybrid_search(graph_store, query, auto_intent=False, now=NOW, **opts)
+        got = [tuple(r) for r in df.collect()]
+        release_caches(df)
+        want = _reference_direct(graph_store, query,
+                                 finish=_reference_graph_merge(graph_store),
+                                 **{o: v for o, v in opts.items() if o != "graph_weight"})
+        assert got == want, (query, got, want)
+        seen |= {r[-1] for r in got}
+        if query == "zebra quartz" and opts.get("vector_weight") == 1.0:
+            # row 35 is no seed (rrf_score 0) and 3 hops from seed 32:
+            # its adjacency shows only as the to_id of a ball edge
+            assert (35, "direct+graph") in {(r[0], r[-1]) for r in got}
+    assert "direct+graph" in seen
