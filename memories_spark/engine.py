@@ -1838,14 +1838,15 @@ class MemoriesEngine:
         )
 
     def build_lexical_index(self) -> dict:
-        """One-off BM25 index build: persist term-sorted postings,
-        doc lengths, and the global IDF/corpus tables (the reference
-        keeps its BM25 index persistent between queries,
-        memory_engine.py:224-232; ours previously re-derived term
-        stats from the full corpus on every search). Pins the current
-        :meth:`table_version`; any later mutation makes
-        :func:`memories_spark.search.hybrid_search` fall back to the
-        inline build until the next build/refresh."""
+        """One-off BM25 index build: one tokenize pass writes every
+        folder's term-sorted postings and ``term_df`` partial, one
+        aggregation derives the corpus scalars ``n``/``avgdl``/``a``,
+        and the meta pins them with the current :meth:`table_version`
+        (the reference keeps its BM25 index persistent between
+        queries, memory_engine.py:224-232; ours previously re-derived
+        term stats from the full corpus on every search). Any later
+        mutation makes :func:`memories_spark.search.hybrid_search`
+        fall back to the inline build until the next build/refresh."""
         from memories_spark.operators import lexical_index
 
         return lexical_index.build_lexical(
@@ -1859,12 +1860,15 @@ class MemoriesEngine:
         )
 
     def refresh_lexical_index(self) -> dict:
-        """INCREMENTAL lexical maintenance: re-tokenize ONLY the
-        folders whose file signatures changed since the pinned
-        version (partition-pruned scan), swap their postings/doc_stats
-        partitions, drop removed folders, then re-derive the global
-        IDF/corpus tables in one pass over the merged postings (never
-        over raw text) and pin the new table version."""
+        """INCREMENTAL lexical maintenance in at most 8 Spark jobs (7
+        after a write to one folder): re-tokenize ONLY the folders
+        whose file signatures changed since the pinned version
+        (partition-pruned scan) into their postings and ``term_df``
+        partials, hardlink the unchanged folders, drop removed ones,
+        re-derive the corpus scalars from the per-folder partials (no
+        postings or raw text of an unchanged folder is read) and pin
+        them with the new table version. An index in an older on-disk
+        format is rebuilt instead."""
         from memories_spark.operators import lexical_index
 
         meta = lexical_index.read_meta(self._dir("_lexical_index"))
@@ -1905,19 +1909,22 @@ class MemoriesEngine:
         return meta
 
     def lexical_stats(self, query_terms: list[str], meta: dict | None = None) -> dict:
-        """BM25 stats served from the persisted index: postings + IDF
-        reads carry an In(term) predicate over the term-sorted layout
+        """BM25 stats served from the persisted index: the postings
+        read carries an In(term) predicate over the term-sorted layout
         (row-group pruning), so a search reads the query terms'
-        postings — not the corpus. Plans bind to the meta-named
-        GENERATION, so they stay valid (and consistent) under any
-        concurrent refresh. Pass the ``meta`` you already freshness-
-        checked: re-reading it here could resolve a generation
-        published AFTER your check (a torn index/corpus pairing)."""
+        postings — not the corpus — and takes the corpus scalars from
+        the meta. Plans bind to the meta-named GENERATION, so they stay
+        valid (and consistent) under any concurrent refresh. Pass the
+        ``meta`` you already freshness-checked: re-reading it here
+        could resolve a generation published AFTER your check (a torn
+        index/corpus pairing)."""
         from memories_spark.operators import lexical_index
 
         idx = self._dir("_lexical_index")
+        if meta is None:
+            meta = lexical_index.read_meta(idx)
         return lexical_index.query_stats(
-            self.spark, lexical_index.table_root(idx, meta), query_terms
+            self.spark, lexical_index.table_root(idx, meta), meta, query_terms
         )
 
     def rebuild_from_files(self, file_paths: list[str], now: str, embed_fn=None) -> int:

@@ -19,7 +19,9 @@ maintenance is a MERGE of term deltas instead of a rebuild.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections import Counter
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from memories_spark.functions.hashing import fixed_point, unfix
@@ -50,15 +52,30 @@ def tokenize_terms(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return toks.groupBy("id", "term").agg(F.count("*").alias("tf"))
 
 
-def stats_from_terms(
-    terms: DataFrame, doc_stats: DataFrame | None = None
-) -> dict[str, DataFrame]:
-    """Derive the global BM25 statistics from a ``(id, term, tf)``
-    postings table (extra columns are ignored). Split out from
-    :func:`build_term_stats` so the persisted lexical index can
-    re-derive IDF/corpus scalars after an incremental postings merge
-    WITHOUT re-tokenizing any document — the global stats are a
-    single pass over the (already tokenized) postings.
+def raw_idf(n: Column, df: Column) -> Column:
+    """rank_bm25's unfloored IDF ``ln((N - df + 0.5) / (df + 0.5))``."""
+    return F.log((n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+
+
+def avg_raw_idf(raw: Column) -> Column:
+    """Aggregate: the vocabulary-average raw IDF ``a`` as an exact
+    fixed-point integer mean at 1e12 (negatives included, rank_bm25
+    semantics) — partition-order independent and identical in the
+    DuckDB oracle."""
+    return (
+        F.sum(fixed_point(raw, IDF_SCALE)).cast("double")
+        / F.count("*")
+        / F.lit(float(10**IDF_SCALE))
+    )
+
+
+def floor_idf(raw: Column, a: Column) -> Column:
+    """The epsilon floor: a negative raw IDF becomes ``eps * a``."""
+    return F.when(raw < 0, F.lit(EPSILON) * a).otherwise(raw)
+
+
+def build_term_stats(docs: DataFrame, id_col: str, text_col: str) -> dict[str, DataFrame]:
+    """Tokenize and derive the global BM25 statistics in one lazy plan.
 
     Fully lazy — no driver actions. Scalar corpus statistics
     (N, avgdl, avg raw IDF) are 1-row DataFrames that downstream
@@ -67,13 +84,26 @@ def stats_from_terms(
     mean, making it partition-order independent and identical in the
     DuckDB oracle.
 
+    ``dl`` (per-doc length) equals ``sum(tf)`` over the postings,
+    which is just the token count — so doc lengths come from a
+    shallow one-scan projection instead of the
+    tokenize→explode→groupBy subtree. That removes one of the four
+    postings-subtree consumers from the plan (smaller logical plan →
+    cheaper per-invocation Catalyst analysis, one fewer tokenize
+    stage at execution). The ``dl > 0`` filter keeps it
+    value-identical: a doc with zero tokens has no postings rows and
+    is therefore absent from the aggregated version too (and from
+    ``corpus``'s N/avgdl).
+
     Returns ``terms(id, term, tf)``, ``doc_stats(id, dl)``,
-    ``corpus(n, avgdl)`` and ``term_idf(term, idf)``
-    (epsilon-floored, vocabulary-wide).
+    ``corpus(n, avgdl)``, ``term_idf(term, idf)`` (epsilon-floored,
+    vocabulary-wide), ``raw_idf(term, raw_idf)`` and ``avg_idf(a)``.
     """
-    terms = terms.select("id", "term", "tf")
-    if doc_stats is None:
-        doc_stats = terms.groupBy("id").agg(F.sum("tf").alias("dl"))
+    terms = tokenize_terms(docs, id_col, text_col)
+    doc_stats = docs.select(
+        F.col(id_col).alias("id"),
+        F.size(tokens_expr(text_col)).cast("long").alias("dl"),
+    ).filter(F.col("dl") > 0)
     # dl are BIGINTs: the sum is exact, so avg is engine-identical.
     corpus = doc_stats.agg(
         F.count("*").cast("double").alias("n"),
@@ -82,25 +112,11 @@ def stats_from_terms(
 
     df_tab = terms.groupBy("term").agg(F.count("*").alias("df"))
     with_idf = df_tab.crossJoin(F.broadcast(corpus)).select(
-        "term",
-        F.log((F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))).alias(
-            "raw_idf"
-        ),
+        "term", raw_idf(F.col("n"), F.col("df")).alias("raw_idf")
     )
-    # average over the whole vocabulary, negatives included
-    # (rank_bm25 semantics); exact integer mean at 1e12.
-    avg_idf = with_idf.agg(
-        (
-            F.sum(fixed_point(F.col("raw_idf"), IDF_SCALE)).cast("double")
-            / F.count("*")
-            / F.lit(float(10**IDF_SCALE))
-        ).alias("a")
-    )
+    avg_idf = with_idf.agg(avg_raw_idf(F.col("raw_idf")).alias("a"))
     term_idf = with_idf.crossJoin(F.broadcast(avg_idf)).select(
-        "term",
-        F.when(F.col("raw_idf") < 0, F.lit(EPSILON) * F.col("a"))
-        .otherwise(F.col("raw_idf"))
-        .alias("idf"),
+        "term", floor_idf(F.col("raw_idf"), F.col("a")).alias("idf")
     )
     # raw_idf/avg_idf are exported so the INLINE scoring path can
     # apply the epsilon floor per posting row instead of joining the
@@ -109,8 +125,8 @@ def stats_from_terms(
     # vocabulary-mean aggregation OFF the scoring join's critical
     # path — avg_idf becomes a sibling broadcast branch that overlaps
     # with the postings join instead of gating it (guide §2.6: the
-    # broadcast-exchange future runs concurrently). The persisted
-    # lexical index keeps consuming term_idf (its on-disk layout).
+    # broadcast-exchange future runs concurrently). The registry's
+    # persisted term-stats index stores term_idf (its on-disk layout).
     return {
         "terms": terms,
         "doc_stats": doc_stats,
@@ -119,27 +135,6 @@ def stats_from_terms(
         "raw_idf": with_idf,
         "avg_idf": avg_idf,
     }
-
-
-def build_term_stats(docs: DataFrame, id_col: str, text_col: str) -> dict[str, DataFrame]:
-    """Tokenize + derive in one lazy plan (see :func:`stats_from_terms`).
-
-    ``dl`` (per-doc length) equals ``sum(tf)`` over the postings,
-    which is just the token count — so when the raw text is in hand,
-    doc lengths come from a shallow one-scan projection instead of
-    the tokenize→explode→groupBy subtree. That removes one of the
-    four postings-subtree consumers from the plan (smaller logical
-    plan → cheaper per-invocation Catalyst analysis, one fewer
-    tokenize stage at execution). The ``dl > 0`` filter keeps it
-    value-identical: a doc with zero tokens has no postings rows and
-    is therefore absent from the aggregated version too (and from
-    ``corpus``'s N/avgdl).
-    """
-    doc_stats = docs.select(
-        F.col(id_col).alias("id"),
-        F.size(tokens_expr(text_col)).cast("long").alias("dl"),
-    ).filter(F.col("dl") > 0)
-    return stats_from_terms(tokenize_terms(docs, id_col, text_col), doc_stats)
 
 
 def bm25_scores(
@@ -164,8 +159,12 @@ def bm25_scores(
     stats = stats or build_term_stats(docs, id_col, text_col)
     terms, doc_stats, term_idf = stats["terms"], stats["doc_stats"], stats["term_idf"]
 
-    qdf = local_frame(spark, [(t,) for t in query_terms], "term string")
-    qcount = qdf.groupBy("term").agg(F.count("*").alias("qtf"))
+    # query-term multiplicities counted on the driver: a JVM
+    # LocalRelation broadcasts without a job, an aggregate over it
+    # would cost a shuffle per search
+    qcount = local_frame(
+        spark, sorted(Counter(query_terms).items()), "term string, qtf long"
+    )
 
     if "raw_idf" in stats:
         # Inline stats: floor the IDF per contribution row instead of
@@ -176,21 +175,23 @@ def bm25_scores(
         # aggregations overlap with the postings join instead of
         # running serially ahead of it.
         qidf = stats["raw_idf"].join(F.broadcast(qcount), "term")
-        idf_expr = (
-            F.when(F.col("raw_idf") < 0, F.lit(EPSILON) * F.col("a"))
-            .otherwise(F.col("raw_idf"))
-        )
+        idf_expr = floor_idf(F.col("raw_idf"), F.col("a"))
         extra = [F.broadcast(stats["avg_idf"])]
     else:
-        # Persisted-index stats: term_idf is a pre-floored on-disk
-        # table pruned to the query terms — nothing to defer.
+        # Served stats: term_idf is already floored and pruned to the
+        # query terms — read from the registry's persisted term-stats
+        # table, or derived by the engine's lexical index from its
+        # pruned postings and the scalars pinned in its meta
+        # (lexical_index.query_stats). Nothing to defer.
         qidf = term_idf.join(F.broadcast(qcount), "term")
         idf_expr = F.col("idf")
         extra = []
 
-    contrib = terms.join(F.broadcast(qidf), "term").join(doc_stats, "id").crossJoin(
-        F.broadcast(stats["corpus"].select("avgdl"))
-    )
+    contrib = terms.join(F.broadcast(qidf), "term").join(doc_stats, "id")
+    if "corpus" in stats:
+        # the engine's lexical index carries its pinned avgdl on the
+        # term_idf rows instead of a 1-row corpus frame
+        contrib = contrib.crossJoin(F.broadcast(stats["corpus"].select("avgdl")))
     for aux in extra:
         contrib = contrib.crossJoin(aux)
     contrib = contrib.select(

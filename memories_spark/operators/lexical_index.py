@@ -10,59 +10,69 @@ query, the last full-corpus-per-query cost in the hot path. This
 module hoists that work into a persisted index:
 
 Layout (``<store>/_lexical_index/``): ``meta.json`` at the root names
-the active immutable GENERATION dir (``g-<hex>/``) holding the four
-tables — build/refresh publish a complete new generation (hardlinking
-unchanged folders) and swap the meta atomically, so in-flight readers
-bound to the previous generation (retained one publish) never race a
-refresh; see the generation-publishing note in ``ann_index.py``.
-Inside a generation:
+the active immutable GENERATION dir (``g-<hex>/``) holding the two
+per-folder tables — build/refresh publish a complete new generation
+(hardlinking unchanged folders) and swap the meta atomically, so
+in-flight readers bound to the previous generation (retained one
+publish) never race a refresh; see the generation-publishing note in
+``ann_index.py``. Inside a generation:
 
-- ``postings/part=<folder>/`` — ``(id, term, tf)`` partitioned by the
-  store's folder and sorted by ``term`` within each file, so a query's
-  ``In(term)`` predicate prunes row groups via parquet min/max stats.
-  At 100 TB a 5-term query touches a handful of row groups per
-  folder, not the corpus.
-- ``doc_stats/part=<folder>/`` — ``(id, dl)`` per-document lengths.
-- ``term_idf/`` — ``(term, idf)`` epsilon-floored vocabulary IDFs,
-  range-partitioned + sorted by term (same pruning).
-- ``corpus/`` — the 1-row ``(n, avgdl)`` scalars.
+- ``postings/part=<folder>/`` — ``(id, term, tf, dl)`` partitioned by
+  the store's folder and sorted by ``term`` within each file, so a
+  query's ``In(term)`` predicate prunes row groups via parquet min/max
+  stats. At 100 TB a 5-term query touches a handful of row groups per
+  folder, not the corpus. Each row carries its document's length
+  ``dl``, so the pruned read is all a query needs per document.
+- ``term_df/part=<folder>/`` — ``(term, df)``, the folder's document
+  frequencies. A document lives in exactly one folder, so the
+  vocabulary df is the sum of the folder partials.
 
-``meta.json`` pins the table version, per-folder file signatures and
-the active generation name.
+``meta.json`` pins the table version, the per-folder file signatures,
+each folder's ``(n, sum_dl)`` (documents with at least one token, and
+their total length), the active generation name and the three BM25
+corpus scalars of that generation: ``n``, ``avgdl`` and ``a`` (the
+vocabulary-average raw IDF the epsilon floor uses, the exact
+fixed-point mean of :func:`bm25_op.avg_raw_idf`). The scalars ride the
+atomic meta swap with the generation they describe, so a reader never
+pairs new postings with old scalars.
 
-Maintenance (``refresh_lexical``): the per-document tables are
-maintained INCREMENTALLY — the engine diffs its per-folder file
-signatures and re-tokenizes ONLY the changed folders (a
-partition-pruned scan); unchanged folders' postings files are
-untouched bytes and removed folders' partitions are dropped — the
-same O(changed data) catch-up as ``refresh_ivf``. The GLOBAL tables
-(df → idf, N, avgdl) are then re-derived in one pass over the merged
-postings index — never over raw text: every document mutation
-perturbs every term's IDF, so a global pass is irreducible, but it
-reads the (already tokenized, much smaller) postings, not the corpus.
+Maintenance (``refresh_lexical``): the engine diffs its per-folder
+file signatures and re-tokenizes ONLY the changed folders (a
+partition-pruned scan) in one pass that writes their postings and
+``term_df`` partials and returns their ``(n, sum_dl)``; unchanged
+folders' files are carried forward as hardlinks and removed folders
+are dropped — the same O(changed data) catch-up as ``refresh_ivf``.
+Every document mutation perturbs ``a`` (it averages over the whole
+vocabulary), so ``a`` is re-derived by one aggregation over all
+folders' ``term_df`` partials ending in a 1-row collect; ``n`` and
+``avgdl`` are exact integer sums of the per-folder stats. No
+unchanged folder's postings are read. A refresh after a write to one
+folder costs 7 Spark jobs whatever the corpus size: 4 for the
+tokenize pass (its cache, the postings write, the ``term_df`` write
+and the folder-stats collect) and 3 for the ``a`` aggregation. A
+refresh or build over several folders adds one shuffle job.
 
 Staleness: the meta pins the store's table version; consumers compare
 and fall back to the inline full-corpus build after any mutation, so
 results are never silently stale. An emptied store refreshes to an
-EMPTY index (all partitions dropped, empty globals) that serves
-exactly what the inline build would — zero lexical rows — and resumes
+EMPTY index (all partitions dropped, ``n`` = 0) that serves exactly
+what the inline build would — zero lexical rows — and resumes
 incremental maintenance when documents return. The meta is always the
-LAST artifact written (build renames a fully-populated tmp dir into
-place; refresh rewrites meta after every swap), so a crashed build or
-refresh can never leave a fresh-looking meta over missing tables.
+LAST artifact written (build and refresh rename a fully-populated tmp
+dir into place before the meta swap), so a crashed build or refresh
+can never leave a fresh-looking meta over missing tables.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from memories_spark.functions.texttools import tokens_expr
 from memories_spark.operators import bm25 as bm25_op
 
 # the meta.json + generation-publishing contract is shared by every
@@ -82,13 +92,16 @@ from memories_spark.operators.ann_index import (
 #: publish after migration).
 _TABLES = ("postings", "doc_stats", "term_idf", "corpus")
 
+#: The per-folder tables of a generation.
+_FOLDER_TABLES = ("postings", "term_df")
+
 #: Partition value used when the caller supplies no part column.
 DEFAULT_PART = "(all)"
 
 _POSTINGS_SCHEMA = "id long, term string, tf long, dl long, part string"
-_DOC_STATS_SCHEMA = "id long, dl long, part string"
+_TERM_DF_SCHEMA = "term string, df long, part string"
 
-FORMAT_VERSION = 2  # 2: postings denormalize the doc length (dl)
+FORMAT_VERSION = 3  # 3: per-folder term_df partials, BM25 scalars in the meta
 
 
 def _with_part(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -99,61 +112,76 @@ def _with_part(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(*cols, part)
 
 
-def _write_per_doc(docs: DataFrame, id_col: str, text_col: str, dest: str) -> None:
-    """Write postings + doc_stats partitioned by folder, term-sorted
-    within each postings file (row-group pruning for In(term)).
+def _write_folders(
+    docs: DataFrame, id_col: str, text_col: str, dest: str, n_folders: int
+) -> dict[str, list[int]]:
+    """One tokenize pass over ``docs`` (the ``n_folders`` folders
+    being written) writes each folder's postings (term-sorted within
+    each file, for row-group pruning of In(term)) and ``term_df``
+    partial, and returns each folder's ``[n, sum_dl]``.
 
-    Postings DENORMALIZE the document length (``dl``): the serving
-    read then touches ONLY the pruned postings row groups — matched
-    docs' lengths ride along, so no O(corpus) doc_stats scan sits in
-    the query path. +8 bytes per posting buys a serving plan whose
-    input is proportional to the query's matches, which is the number
-    that matters at 100 TB. (doc_stats is still written — audits and
-    rollups read it — but queries don't.)"""
+    The token rows are clustered by folder ONCE (the same
+    ``tokens_expr`` split as :func:`bm25_op.tokenize_terms`): the tf
+    aggregation, the ``dl`` window over each document and every
+    per-folder output below then need no further shuffle. They are
+    cached for the three outputs and released before returning, so
+    the pass costs five Spark jobs (four for one folder)."""
     d = _with_part(docs, id_col, text_col)
-    # ONE tokenize pass feeds both postings and lengths (at warehouse
-    # scale this persist is the staging table a production build
-    # would materialize)
-    terms = (
-        bm25_op.tokenize_terms(d, "id", "text")
-        .join(d.select("id", "part"), "id")
-        .persist()
-    )
+    toks = d.select("part", "id", F.explode(tokens_expr("text")).alias("term"))
+    # a single folder (the usual refresh) is clustered by one
+    # partition without a shuffle; several are hash-partitioned by folder
+    toks = toks.coalesce(1) if n_folders <= 1 else toks.repartition(n_folders, "part")
+    tf = toks.groupBy("part", "id", "term").agg(F.count("*").alias("tf"))
+    post = tf.withColumn(
+        "dl", F.sum("tf").over(Window.partitionBy("part", "id"))
+    ).persist()
     try:
-        dl = terms.groupBy("id", "part").agg(F.sum("tf").alias("dl"))
         (
-            terms.join(dl.select("id", "dl"), "id")
-            .repartition(F.col("part"))
-            .sortWithinPartitions("part", "term")
+            post.sortWithinPartitions("part", "term")
             .select("id", "term", "tf", "dl", "part")
             .write.partitionBy("part")
             .parquet(os.path.join(dest, "postings"))
         )
-        dl.select("id", "dl", "part").write.partitionBy("part").parquet(
-            os.path.join(dest, "doc_stats")
+        (
+            post.groupBy("part", "term")
+            .agg(F.count("*").alias("df"))
+            .write.partitionBy("part")
+            .parquet(os.path.join(dest, "term_df"))
+        )
+        rows = (
+            post.groupBy("part")
+            .agg(F.count_distinct("id").alias("n"), F.sum("tf").alias("sum_dl"))
+            .collect()
         )
     finally:
-        terms.unpersist()
+        post.unpersist(blocking=True)
+    return {r.part: [int(r.n), int(r.sum_dl)] for r in rows}
 
 
-def _write_globals(spark: SparkSession, index_dir: str, tmp_suffix: str) -> None:
-    """Re-derive idf/corpus from the CURRENT postings dir and swap the
-    global tables in atomically (one pass over postings, no text)."""
-    postings = spark.read.schema(_POSTINGS_SCHEMA).parquet(
-        os.path.join(index_dir, "postings")
+def _scalars(
+    spark: SparkSession, root: str, folder_stats: dict[str, list[int]]
+) -> dict:
+    """The generation's BM25 corpus scalars ``n``, ``avgdl`` and ``a``.
+
+    ``n`` and ``avgdl`` are the integer sums of the per-folder stats
+    (``avgdl`` is the same double division the inline build does).
+    ``a`` needs every term's vocabulary df: one aggregation over all
+    folders' ``term_df`` partials, ending in a 1-row collect. An empty
+    index has no vocabulary, so it skips Spark and serves nothing."""
+    n = sum(s[0] for s in folder_stats.values())
+    if n == 0:
+        return {"n": 0, "avgdl": None, "a": None}
+    sum_dl = sum(s[1] for s in folder_stats.values())
+    df_tab = (
+        spark.read.schema(_TERM_DF_SCHEMA)
+        .parquet(os.path.join(root, "term_df"))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
     )
-    stats = bm25_op.stats_from_terms(postings)
-    tmp_idf = os.path.join(index_dir, f"term_idf.tmp-{tmp_suffix}")
-    tmp_corpus = os.path.join(index_dir, f"corpus.tmp-{tmp_suffix}")
-    stats["term_idf"].repartitionByRange(4, "term").sortWithinPartitions(
-        "term"
-    ).write.parquet(tmp_idf)
-    stats["corpus"].coalesce(1).write.parquet(tmp_corpus)
-    for name, tmp in (("term_idf", tmp_idf), ("corpus", tmp_corpus)):
-        final = os.path.join(index_dir, name)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+    [row] = df_tab.agg(
+        bm25_op.avg_raw_idf(bm25_op.raw_idf(F.lit(float(n)), F.col("df"))).alias("a")
+    ).collect()
+    return {"n": n, "avgdl": float(sum_dl) / n, "a": row.a}
 
 
 def build_lexical(
@@ -165,28 +193,30 @@ def build_lexical(
     version: int = 0,
     folder_sigs: dict[str, str] | None = None,
 ) -> dict:
-    """Full build: tokenize the whole corpus once, persist all four
-    tables, pin version + folder signatures. ``docs`` may carry a
-    ``part`` column (the store folder) for incremental maintenance.
+    """Full build: tokenize the whole corpus once, write every
+    folder's postings and ``term_df`` partial, derive the scalars, pin
+    version + folder signatures. ``docs`` may carry a ``part`` column
+    (the store folder) for incremental maintenance.
 
-    Everything — all four tables including the derived globals —
-    lands in a tmp dir first, is renamed into place as a complete
-    immutable GENERATION, and only then does the atomic meta swap
-    publish it (see the generation-publishing note in
-    ``operators/ann_index.py``): an interrupted build leaves the old
-    index fully intact, and a concurrent reader bound to the previous
-    generation keeps scoring against a complete, consistent index."""
+    Every table lands in a tmp dir first, is renamed into place as a
+    complete immutable GENERATION, and only then does the atomic meta
+    swap publish it together with its scalars (see the
+    generation-publishing note in ``operators/ann_index.py``): an
+    interrupted build leaves the old index fully intact, and a
+    concurrent reader bound to the previous generation keeps scoring
+    against a complete, consistent index."""
     prev = read_meta(index_dir)
     os.makedirs(index_dir, exist_ok=True)
     gen = new_gen_name()
     tmp = os.path.join(index_dir, f".tmp-{uuid.uuid4().hex[:8]}")
     os.makedirs(tmp, exist_ok=True)
-    _write_per_doc(docs, id_col, text_col, tmp)
-    _write_globals(spark, tmp, uuid.uuid4().hex[:8])
+    stats = _write_folders(docs, id_col, text_col, tmp, len(folder_sigs or {}))
     meta = {
         "version": int(version),
         "format_version": FORMAT_VERSION,
         "folder_sigs": folder_sigs or {},
+        "folder_stats": stats,
+        **_scalars(spark, tmp, stats),
         "gen": gen,
     }
     keep = retain_generations(meta, prev, rebuild=True)
@@ -209,107 +239,95 @@ def refresh_lexical(
     folder_sigs: dict[str, str],
 ) -> dict:
     """Incremental catch-up: re-tokenize only ``changed`` folders
-    (``docs_changed`` is the partition-pruned scan of exactly those),
-    swap their postings/doc_stats partitions, drop ``removed``
-    folders' partitions, leave every other folder's files untouched —
-    then re-derive the global idf/corpus tables from the merged
-    postings and pin the new version + signatures.
+    (``docs_changed`` is the partition-pruned scan of exactly those)
+    into their postings and ``term_df`` partials, drop ``removed``
+    folders, leave every other folder's files untouched — then
+    re-derive the scalars from all folders' ``term_df`` partials and
+    pin them with the new version + signatures.
 
     A store that went EMPTY is just the all-folders-removed case:
-    every partition is dropped, the globals re-derive to empty tables,
-    and the meta stays pinned — serving from the empty-fresh index
-    equals the inline build over the empty store (zero BM25 rows), and
-    the NEXT refresh resumes incrementally when documents return
-    (removing the meta here would strand maintenance on a ValueError).
+    every partition is dropped, ``n`` goes to 0, and the meta stays
+    pinned — serving from the empty-fresh index equals the inline
+    build over the empty store (zero BM25 rows), and the NEXT refresh
+    resumes incrementally when documents return (removing the meta
+    here would strand maintenance on a ValueError).
 
     The refresh NEVER mutates the published generation: changed
-    folders' postings/doc_stats are written fresh into a NEW
-    generation dir, every unchanged folder's files are carried
-    forward as hardlinks (same bytes, O(1) IO each), the globals are
-    re-derived inside the new generation, and the atomic meta swap
-    publishes it — in-flight readers bound to the previous generation
-    (retained one publish) keep scoring against a complete,
-    consistent index, never NEW postings joined to OLD globals and
-    never a partition rmtree'd out from under a running scan."""
+    folders' tables are written fresh into a NEW generation dir,
+    every unchanged folder's files are carried forward as hardlinks
+    (same bytes, O(1) IO each), and the atomic meta swap publishes the
+    generation with its scalars — in-flight readers bound to the
+    previous generation (retained one publish) keep scoring against a
+    complete, consistent index, never NEW postings paired with OLD
+    scalars and never a partition rmtree'd out from under a running
+    scan."""
     meta = read_meta(index_dir)
     if meta is None:
         raise ValueError(f"no lexical index at {index_dir} to refresh")
 
-    cur_root = table_root(index_dir, meta)
-    prev_gen = meta.get("gen")
-    prev_gens_before = list(meta.get("prev_gens", []))
     # capture displaced cost kinds before mutating the meta (see
     # ann_index.retain_generations)
     prev_meta_before = {
-        "gen": prev_gen,
-        "prev_gens": prev_gens_before,
+        "gen": meta["gen"],
+        "prev_gens": list(meta.get("prev_gens", [])),
         "gen_kind": meta.get("gen_kind", "refresh"),
         "prev_gen_kinds": dict(meta.get("prev_gen_kinds", {}) or {}),
     }
-    touched = sorted(set(changed) | set(removed))
-    if touched or not prev_gen:
+    touched = set(changed) | set(removed)
+    if touched:
+        cur_root = table_root(index_dir, meta)
         gen = new_gen_name()
         tmp = os.path.join(index_dir, f".tmp-{uuid.uuid4().hex[:8]}")
-        written: dict[str, set[str]] = {"postings": set(), "doc_stats": set()}
+        stats = {f: s for f, s in meta["folder_stats"].items() if f not in touched}
         if changed and docs_changed is not None:
-            _write_per_doc(docs_changed, id_col, text_col, tmp)
-            for sub in written:
-                written[sub] = {
-                    e
-                    for e in os.listdir(os.path.join(tmp, sub))
-                    if e.startswith("part=")
-                }
+            stats.update(
+                _write_folders(docs_changed, id_col, text_col, tmp, len(changed))
+            )
         # carry every untouched folder forward as hardlinks
-        for sub in ("postings", "doc_stats"):
+        for sub in _FOLDER_TABLES:
             os.makedirs(os.path.join(tmp, sub), exist_ok=True)
-            cur_sub = os.path.join(cur_root, sub)
-            if os.path.isdir(cur_sub):
-                for e in os.listdir(cur_sub):
-                    if (
-                        e.startswith("part=")
-                        and unquote(e[len("part="):]) not in touched
-                        and e not in written[sub]
-                    ):
-                        link_tree(
-                            os.path.join(cur_sub, e), os.path.join(tmp, sub, e)
-                        )
-        _write_globals(spark, tmp, uuid.uuid4().hex[:8])
+            for e in os.listdir(os.path.join(cur_root, sub)):
+                if e.startswith("part=") and unquote(e[len("part="):]) not in touched:
+                    link_tree(os.path.join(cur_root, sub, e), os.path.join(tmp, sub, e))
+        meta.update(folder_stats=stats, **_scalars(spark, tmp, stats))
         os.rename(tmp, os.path.join(index_dir, gen))
         meta["gen"] = gen
     meta["version"] = int(version)
     meta["folder_sigs"] = dict(folder_sigs)
     keep = retain_generations(meta, prev_meta_before)
     publish_meta(index_dir, meta)
-    legacy = _TABLES if prev_gen else ()
-    gc_generations(index_dir, keep, legacy)
+    gc_generations(index_dir, keep, _TABLES)
     return meta
 
 
 def query_stats(
-    spark: SparkSession, index_dir: str, query_terms: list[str]
+    spark: SparkSession, index_dir: str, meta: dict, query_terms: list[str]
 ) -> dict[str, DataFrame]:
     """The stats dict :func:`bm25_op.bm25_scores` consumes, served
-    from the persisted index: postings + IDF reads carry an
-    ``In(term)`` predicate (row-group pruned via the term-sorted
-    layout), the corpus scalars are one row, and the per-doc lengths
-    come from the PRUNED postings' denormalized ``dl`` — only docs
-    matching a query term ever need a length, so the O(corpus)
-    doc_stats table stays out of the query path entirely. Explicit
-    schemas so an index that went empty reads as zero rows, not a
-    schema-inference failure."""
+    from the generation at ``index_dir`` and the scalars of the
+    ``meta`` that names it. The postings read carries an ``In(term)``
+    predicate (row-group pruned via the term-sorted layout) and is the
+    only file a search opens: postings hold one row per
+    ``(id, term)``, so a query term's row count there IS its
+    vocabulary df, and its rows carry each matched document's length
+    ``dl`` — the O(corpus) document lengths stay out of the query
+    path. Explicit schema so an index that went empty reads as zero
+    rows, not a schema-inference failure."""
     qset = sorted(set(query_terms))
     pruned = (
         spark.read.schema(_POSTINGS_SCHEMA)
         .parquet(os.path.join(index_dir, "postings"))
         .filter(F.col("term").isin(qset))
     )
+    term_idf = pruned.groupBy("term").count().select(
+        "term",
+        bm25_op.floor_idf(
+            bm25_op.raw_idf(F.lit(float(meta["n"])), F.col("count")), F.lit(meta["a"])
+        ).alias("idf"),
+        F.lit(meta["avgdl"]).alias("avgdl"),
+    )
     return {
         "terms": pruned.select("id", "term", "tf"),
         "doc_stats": pruned.select("id", "dl").distinct(),
-        "term_idf": spark.read.schema("term string, idf double")
-        .parquet(os.path.join(index_dir, "term_idf"))
-        .filter(F.col("term").isin(qset)),
-        "corpus": spark.read.schema("n double, avgdl double").parquet(
-            os.path.join(index_dir, "corpus")
-        ),
+        "term_idf": term_idf,
     }

@@ -63,14 +63,18 @@ def test_index_layout_and_meta(store):
     assert meta["folder_sigs"]  # per-folder identity pinned for refresh
     assert meta["gen"].startswith("g-")  # tables live in a generation
     root = table_root(idx, meta)
-    for sub in ("postings", "doc_stats"):
+    for sub in ("postings", "term_df"):
         parts = [e for e in os.listdir(os.path.join(root, sub)) if e.startswith("part=")]
         assert parts == ["part=corp"], (sub, parts)
-    assert os.path.isdir(os.path.join(root, "term_idf"))
-    assert os.path.isdir(os.path.join(root, "corpus"))
-    # every live doc has a length row; postings cover the vocabulary
-    n_docs = store.spark.read.parquet(os.path.join(root, "doc_stats")).count()
-    assert n_docs == store.count()
+    assert sorted(os.listdir(root)) == ["postings", "term_df"]
+    # every live doc has postings rows (each carrying its length), and
+    # the pinned corpus scalars describe exactly the live corpus
+    post = store.spark.read.parquet(os.path.join(root, "postings"))
+    live = {r.id for r in store.table("memories").select("id").collect()}
+    assert {r.id for r in post.select("id").distinct().collect()} == live
+    assert meta["n"] == store.count() == len(live)
+    assert meta["folder_stats"]["corp"][0] == meta["n"]
+    assert meta["avgdl"] > 0 and meta["a"] is not None
 
 
 def test_indexed_results_identical_to_inline(store):
@@ -166,14 +170,16 @@ def test_stale_index_falls_back_then_refresh_restores(spark, tmp_path):
     inline2 = _rows(hybrid_search(eng, q, k=5, auto_intent=False, now=LATER))
     assert refreshed == inline2
     assert new_id in [r[0] for r in refreshed]
-    # the deleted doc is gone from the index's doc_stats
+    # the deleted doc is gone from the index's postings, and the
+    # pinned doc count follows the live non-archived corpus
     ids = {
         int(r.id)
         for r in spark.read.parquet(
-            os.path.join(table_root(eng._dir("_lexical_index")), "doc_stats")
-        ).collect()
+            os.path.join(table_root(eng._dir("_lexical_index")), "postings")
+        ).select("id").collect()
     }
     assert 0 not in ids and new_id in ids
+    assert meta["n"] == eng.count() == 60
 
 
 def test_refresh_touches_only_changed_folders(spark, tmp_path):
@@ -202,20 +208,170 @@ def test_refresh_touches_only_changed_folders(spark, tmp_path):
                                 os.path.getmtime(p)))
         return tuple(sorted(out))
 
-    stable_before = (snap("postings", "stable"), snap("doc_stats", "stable"))
+    stable_before = (snap("postings", "stable"), snap("term_df", "stable"))
     corp_before = snap("postings", "corp")
 
     eng.add([{"text": "brand new corp doc about cache policy",
               "source": "corp/cache", "embedding": mock_embed("x")}], LATER)
     eng.refresh_lexical_index()
 
-    assert (snap("postings", "stable"), snap("doc_stats", "stable")) == stable_before
+    assert (snap("postings", "stable"), snap("term_df", "stable")) == stable_before
     assert snap("postings", "corp") != corp_before
     # and the refreshed index serves the new doc identically to inline
     q = "brand new corp doc about cache policy"
     assert _rows(hybrid_search(eng, q, k=5, auto_intent=False, now=LATER,
                                lexical=True)) == _rows(
         hybrid_search(eng, q, k=5, auto_intent=False, now=LATER))
+
+
+def test_refresh_job_cost(spark, tmp_path):
+    """A warm refresh after an add is one tokenize pass over the
+    changed folder plus one scalar aggregation: at most 8 Spark jobs
+    (22 when the globals were re-derived from all postings), and it
+    leaves no persisted RDD or storage block behind."""
+    eng = MemoriesEngine(spark, str(tmp_path / "store"))
+    eng.add(_corpus(60), NOW)
+    eng.build_lexical_index()
+    sc = spark.sparkContext
+
+    def add(i):
+        text = f"refresh cost probe {i} about the cache subsystem"
+        eng.add([{"text": text, "source": "corp/cache",
+                  "embedding": mock_embed(text)}], LATER)
+
+    add(0)
+    eng.refresh_lexical_index()  # warm
+    add(1)
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    blocks = {int(i.id()) for i in sc._jsc.sc().getRDDStorageInfo()}
+    sc.setJobGroup("refresh-cost", "one warm lexical refresh")
+    try:
+        eng.refresh_lexical_index()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup("refresh-cost"))
+    assert len(jobs) <= 8, f"{len(jobs)} Spark jobs for one refresh"
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+    assert {int(i.id()) for i in sc._jsc.sc().getRDDStorageInfo()} <= blocks
+    assert eng.lexical_index_meta() is not None
+
+
+def _parity_text(i: int) -> str:
+    # a 6-word vocabulary, so most terms sit in more than half the
+    # docs (negative raw IDF: the epsilon floor applies), plus one
+    # rare term per doc
+    words = ["cache", "policy", "queue", "store", "note", "item"]
+    return " ".join(words[(i * k) % 6] for k in range(1, 6)) + f" rare{i}"
+
+
+def _parity_recs(folders, start):
+    return [
+        {"text": _parity_text(start + j), "source": f"{f}/x",
+         "embedding": mock_embed(_parity_text(start + j))}
+        for j, f in enumerate(folders)
+    ]
+
+
+def test_refresh_matches_fresh_build_and_inline(spark, tmp_path):
+    """After every kind of write the refreshed index pins the SAME
+    corpus scalars as a fresh build and as the inline
+    build_term_stats, and serves the same BM25 (id, score), bit for
+    bit: add, delete, text update, archive, a folder emptied, the
+    whole store emptied and refilled, across folders whose names
+    Hive-escape. Every non-empty step exercises the epsilon floor."""
+    from memories_spark.operators import bm25 as bm25_op
+    from memories_spark.operators.lexical_index import build_lexical
+
+    eng = MemoriesEngine(spark, str(tmp_path / "store"))
+    folders = ["alpha", "beta", "my docs", "a%b"]
+    eng.add(_parity_recs(folders * 4, 0), NOW)
+    eng.build_lexical_index()
+    q = ["cache", "cache", "policy", "rare3", "absent"]
+
+    def check(step):
+        meta = eng.refresh_lexical_index()
+        assert eng.lexical_index_meta() == meta, step
+        docs = eng._live_texts()
+        fresh = build_lexical(
+            spark, docs, "id", "text", str(tmp_path / f"fresh-{step}"),
+            folder_sigs=meta["folder_sigs"],
+        )
+        inline = bm25_op.build_term_stats(docs, "id", "text")
+        row = inline["corpus"].crossJoin(inline["avg_idf"]).first()
+        expected = (row.n, row.avgdl, row.a)
+        for m in (meta, fresh):
+            assert (float(m["n"]), m["avgdl"], m["a"]) == expected, (step, m)
+        assert meta["folder_stats"] == fresh["folder_stats"], step
+        served = sorted(
+            (r.id, r.score) for r in bm25_op.bm25_scores(
+                docs, "id", "text", q, stats=eng.lexical_stats(q, meta=meta)
+            ).collect()
+        )
+        assert served == sorted(
+            (r.id, r.score)
+            for r in bm25_op.bm25_scores(docs, "id", "text", q).collect()
+        ), step
+        if row.n:
+            floored = inline["raw_idf"].filter(F.col("raw_idf") < 0)
+            assert floored.filter(F.col("term") == "cache").count() == 1, step
+            assert served, step
+        else:
+            assert served == [], step
+
+    check("build")
+    ids = sorted(r.id for r in eng.table("memories").select("id").collect())
+    eng.add(_parity_recs(["alpha", "a%b"], 100), LATER)
+    check("add")
+    eng.delete([ids[1]], LATER)
+    check("delete")
+    eng.update(ids[2], LATER, text="cache cache rare3 policy")
+    check("update")
+    eng.set_flags([ids[3]], LATER, archived=True)
+    check("archive")
+    eng.delete_by_prefix("beta")
+    check("folder emptied")
+    for f in ("alpha", "my docs", "a%b"):
+        eng.delete_by_prefix(f)
+    check("store emptied")
+    eng.add(_parity_recs(["beta", "my docs", "gamma"] * 3, 200), LATER)
+    check("refilled")
+
+
+def test_old_format_index_reads_stale_then_rebuilds(spark, tmp_path):
+    """An on-disk index of an older format is never served: its meta
+    reads as stale, search takes the inline path, and the next refresh
+    rebuilds it at the current format, serving the same rows."""
+    from memories_spark.operators.lexical_index import (
+        FORMAT_VERSION, publish_meta, read_meta,
+    )
+
+    eng = MemoriesEngine(spark, str(tmp_path / "store"))
+    eng.add(_corpus(40), NOW)
+    eng.build_lexical_index()
+    idx = eng._dir("_lexical_index")
+    meta = read_meta(idx)
+    old = {k: v for k, v in meta.items()
+           if k not in ("n", "avgdl", "a", "folder_stats")}
+    publish_meta(idx, dict(old, format_version=2))
+    assert eng.lexical_index_meta() is None
+
+    q = "cache subsystem policy"
+    served = hybrid_search(eng, q, k=5, auto_intent=False, now=NOW, lexical=True)
+    # plan strings truncate paths: assert on the tokenizing split
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert "split(lower(trim(text" in plan
+    inline = _rows(hybrid_search(eng, q, k=5, auto_intent=False, now=NOW))
+    assert _rows(served) == inline
+
+    rebuilt = eng.refresh_lexical_index()
+    assert rebuilt["format_version"] == FORMAT_VERSION
+    assert rebuilt["gen"] != meta["gen"] and rebuilt["gen_kind"] == "build"
+    assert eng.lexical_index_meta() == rebuilt
+    indexed = hybrid_search(eng, q, k=5, auto_intent=False, now=NOW, lexical=True)
+    assert "split(lower(trim(text" not in (
+        indexed._jdf.queryExecution().executedPlan().toString()
+    )
+    assert _rows(indexed) == inline
 
 
 def test_refresh_handles_hive_escaped_folder_names(spark, tmp_path):
@@ -273,7 +429,7 @@ def test_refresh_handles_hive_escaped_folder_names(spark, tmp_path):
 
 def test_empty_store_refresh_serves_empty_then_resumes(spark, tmp_path):
     """A store that went empty refreshes to an EMPTY index (all
-    partitions dropped, empty globals) whose results equal the inline
+    partitions dropped, n = 0) whose results equal the inline
     build — and the NEXT refresh resumes incremental maintenance when
     documents return (removing the meta would strand maintenance on
     ValueError, the round-5 review finding)."""
@@ -343,8 +499,10 @@ def test_build_is_atomic_no_partial_state(store):
     leftover tmp dirs (a crash mid-build leaves the OLD index intact)."""
     idx = store._dir("_lexical_index")
     root = table_root(idx)
-    for sub in ("postings", "doc_stats", "term_idf", "corpus"):
+    for sub in ("postings", "term_df"):
         assert os.path.isdir(os.path.join(root, sub)), sub
+    meta = store.lexical_index_meta()
+    assert {"n", "avgdl", "a", "folder_stats"} <= set(meta)
     assert os.path.exists(os.path.join(idx, "meta.json"))
     assert not [e for e in os.listdir(idx) if ".tmp-" in e]
     assert not [e for e in os.listdir(os.path.dirname(idx)) if ".tmp-" in e]
