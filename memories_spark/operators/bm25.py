@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from memories_spark.functions.hashing import fixed_point, unfix
@@ -150,14 +150,29 @@ def bm25_scores(
     fixed-point sum (order-independent across engines/partitionings).
     Query term multiplicity counts, like rank_bm25's per-token loop.
 
-    Plan shape: the (tiny) query-term list joins the vocabulary IDF
-    table first, the result broadcasts into the posting join — the
-    big ``terms`` relation is filtered to query terms without a
-    shuffle, then joined to per-doc lengths.
+    ``stats`` comes in three shapes, all scored by the one
+    fixed-point contribution below:
+
+    - inline (:func:`build_term_stats`, the default): the query-term
+      list joins the vocabulary's raw IDF first, the result
+      broadcasts into the posting join, and the epsilon floor is
+      applied per contribution row;
+    - the registry's persisted term-stats tables (``terms``,
+      ``doc_stats``, ``corpus``, pre-floored ``term_idf``);
+    - the engine's lexical index (:func:`lexical_index.query_stats`):
+      the term-pruned ``postings(id, term, tf, dl)`` frame plus the
+      generation's scalars ``n``, ``a`` and ``avgdl``.
+
+    Plan shape of the lexical-index branch: ONE pass over the pruned
+    postings. The query-term counts join as a broadcast LocalRelation,
+    each term's df is ``count(*) over (partition by term)`` on those
+    rows (postings hold one row per ``(id, term)``, so the count IS
+    the vocabulary df), ``dl`` is read off the row itself, and the
+    IDF takes ``n`` and ``a`` as literals. That is two shuffles — by
+    term for the df, by id for the sum — and one postings scan.
     """
     spark = docs.sparkSession
     stats = stats or build_term_stats(docs, id_col, text_col)
-    terms, doc_stats, term_idf = stats["terms"], stats["doc_stats"], stats["term_idf"]
 
     # query-term multiplicities counted on the driver: a JVM
     # LocalRelation broadcasts without a job, an aggregate over it
@@ -166,41 +181,46 @@ def bm25_scores(
         spark, sorted(Counter(query_terms).items()), "term string, qtf long"
     )
 
-    if "raw_idf" in stats:
-        # Inline stats: floor the IDF per contribution row instead of
-        # pre-floored vocabulary join — when(raw < 0, eps*a, raw) is
-        # the identical expression, but the vocabulary-mean branch
-        # (avg_idf) now broadcasts into the FINAL projection rather
-        # than gating the query-term join, so the two full-vocabulary
-        # aggregations overlap with the postings join instead of
-        # running serially ahead of it.
-        qidf = stats["raw_idf"].join(F.broadcast(qcount), "term")
-        idf_expr = floor_idf(F.col("raw_idf"), F.col("a"))
-        extra = [F.broadcast(stats["avg_idf"])]
+    if "postings" in stats:
+        contrib = (
+            stats["postings"].join(F.broadcast(qcount), "term")
+            .withColumn("df", F.count("*").over(Window.partitionBy("term")))
+        )
+        raw = raw_idf(F.lit(float(stats["n"])), F.col("df"))
+        idf = floor_idf(raw, F.lit(stats["a"]))
+        avgdl = F.lit(stats["avgdl"])
     else:
-        # Served stats: term_idf is already floored and pruned to the
-        # query terms — read from the registry's persisted term-stats
-        # table, or derived by the engine's lexical index from its
-        # pruned postings and the scalars pinned in its meta
-        # (lexical_index.query_stats). Nothing to defer.
-        qidf = term_idf.join(F.broadcast(qcount), "term")
-        idf_expr = F.col("idf")
-        extra = []
+        if "raw_idf" in stats:
+            # Inline stats: floor the IDF per contribution row instead
+            # of a pre-floored vocabulary join — when(raw < 0, eps*a,
+            # raw) is the identical expression, but the vocabulary-mean
+            # branch (avg_idf) broadcasts into the FINAL projection
+            # rather than gating the query-term join, so the two
+            # full-vocabulary aggregations overlap with the postings
+            # join instead of running serially ahead of it.
+            qidf = stats["raw_idf"].join(F.broadcast(qcount), "term")
+            idf = floor_idf(F.col("raw_idf"), F.col("a"))
+            scalars = [stats["corpus"].select("avgdl"), stats["avg_idf"]]
+        else:
+            # the registry's persisted term_idf is already floored and
+            # pruned to the query terms
+            qidf = stats["term_idf"].join(F.broadcast(qcount), "term")
+            idf = F.col("idf")
+            scalars = [stats["corpus"].select("avgdl")]
+        contrib = stats["terms"].join(F.broadcast(qidf), "term").join(
+            stats["doc_stats"], "id"
+        )
+        for one_row in scalars:
+            contrib = contrib.crossJoin(F.broadcast(one_row))
+        avgdl = F.col("avgdl")
 
-    contrib = terms.join(F.broadcast(qidf), "term").join(doc_stats, "id")
-    if "corpus" in stats:
-        # the engine's lexical index carries its pinned avgdl on the
-        # term_idf rows instead of a 1-row corpus frame
-        contrib = contrib.crossJoin(F.broadcast(stats["corpus"].select("avgdl")))
-    for aux in extra:
-        contrib = contrib.crossJoin(aux)
     contrib = contrib.select(
         "id",
         fixed_point(
             F.col("qtf")
-            * idf_expr
+            * idf
             * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))),
+            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / avgdl)),
             SCORE_SCALE,
         ).alias("c"),
     )

@@ -22,7 +22,9 @@ publish) never race a refresh; see the generation-publishing note in
   query's ``In(term)`` predicate prunes row groups via parquet min/max
   stats. At 100 TB a 5-term query touches a handful of row groups per
   folder, not the corpus. Each row carries its document's length
-  ``dl``, so the pruned read is all a query needs per document.
+  ``dl``, so the pruned read is all a query needs: a search scores
+  BM25 in one pass over it, taking each term's df as its row count
+  and ``dl`` off the row (see :func:`query_stats`).
 - ``term_df/part=<folder>/`` — ``(term, df)``, the folder's document
   frequencies. A document lives in exactly one folder, so the
   vocabulary df is the sum of the folder partials.
@@ -302,32 +304,24 @@ def refresh_lexical(
 
 def query_stats(
     spark: SparkSession, index_dir: str, meta: dict, query_terms: list[str]
-) -> dict[str, DataFrame]:
-    """The stats dict :func:`bm25_op.bm25_scores` consumes, served
-    from the generation at ``index_dir`` and the scalars of the
-    ``meta`` that names it. The postings read carries an ``In(term)``
-    predicate (row-group pruned via the term-sorted layout) and is the
-    only file a search opens: postings hold one row per
-    ``(id, term)``, so a query term's row count there IS its
-    vocabulary df, and its rows carry each matched document's length
-    ``dl`` — the O(corpus) document lengths stay out of the query
-    path. Explicit schema so an index that went empty reads as zero
-    rows, not a schema-inference failure."""
-    qset = sorted(set(query_terms))
-    pruned = (
+) -> dict:
+    """The stats :func:`bm25_op.bm25_scores` consumes, served from the
+    generation at ``index_dir`` and the scalars of the ``meta`` that
+    names it: the term-pruned ``postings(id, term, tf, dl)`` frame and
+    the meta's ``n``, ``a`` and ``avgdl``.
+
+    The postings read carries an ``In(term)`` predicate (row-group
+    pruned via the term-sorted layout) and is the only file a search
+    opens. Postings hold one row per ``(id, term)``, so a query term's
+    row count there IS its vocabulary df, and each row carries its
+    document's length ``dl``: ``bm25_scores`` derives both from this
+    one frame in a single pass, and the O(corpus) document lengths
+    stay out of the query path. Explicit schema so an index that went
+    empty reads as zero rows, not a schema-inference failure."""
+    postings = (
         spark.read.schema(_POSTINGS_SCHEMA)
         .parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("term").isin(qset))
+        .filter(F.col("term").isin(sorted(set(query_terms))))
+        .select("id", "term", "tf", "dl")
     )
-    term_idf = pruned.groupBy("term").count().select(
-        "term",
-        bm25_op.floor_idf(
-            bm25_op.raw_idf(F.lit(float(meta["n"])), F.col("count")), F.lit(meta["a"])
-        ).alias("idf"),
-        F.lit(meta["avgdl"]).alias("avgdl"),
-    )
-    return {
-        "terms": pruned.select("id", "term", "tf"),
-        "doc_stats": pruned.select("id", "dl").distinct(),
-        "term_idf": term_idf,
-    }
+    return {"postings": postings, **{k: meta[k] for k in ("n", "a", "avgdl")}}

@@ -126,7 +126,7 @@ def hybrid_search(
     scan, so results are never silently wrong after a mutation.
 
     ``lexical=True`` serves the BM25 branch from the engine's
-    persisted lexical index when one is FRESH: postings/IDF reads are
+    persisted lexical index when one is FRESH: the postings read is
     pruned to the query's terms, so the search never tokenizes the
     corpus (the reference's BM25 index is likewise persistent between
     queries, memory_engine.py:224-232). The index corpus is the
@@ -142,15 +142,17 @@ def hybrid_search(
     mutation-side cache invalidation — see
     ``engine.serving_snapshot``). A search caches and checkpoints
     nothing. The direct path is lazy: its candidate sheet is bounded
-    at 600 rows, so the plan is one pass over the sheet, 10–12 Spark
-    jobs for an indexed search, and its small driver-built inputs
-    (query terms, empty tables) are JVM LocalRelations, not Python
-    RDDs. The graph path runs two actions while the plan is built —
-    one collect of the direct rows and one of the seeds' PPR edge ball
-    (see ``graph.collect_ppr``) — merges on the driver, and returns
-    the <= k merged rows as a LocalRelation joined once to the
-    snapshot for (text, source). Call :func:`release_caches` after
-    materializing either way: it drops the snapshot ref.
+    at 600 rows, so the plan is one pass over the sheet, 6 Spark jobs
+    for a warm indexed search (BM25 is one pass over the term-pruned
+    postings: a shuffle by term for the df, one by id for the sum),
+    and its small driver-built inputs (query terms, empty tables) are
+    JVM LocalRelations, not Python RDDs. The graph path runs two
+    actions while the plan is built — one collect of the direct rows
+    and one of the seeds' PPR edge ball (see ``graph.collect_ppr``) —
+    merges on the driver, and returns the <= k merged rows as a
+    LocalRelation joined once to the snapshot for (text, source). Call
+    :func:`release_caches` after materializing either way: it drops
+    the snapshot ref.
     """
     now_dt = datetime.fromisoformat(now) if now else datetime(2024, 1, 1)
 

@@ -13,6 +13,21 @@ runs ``local[N]`` but every setting below is chosen to survive a
   floating timezone would silently shift decay math.
 - Arrow enabled for the few pandas-UDF paths (embedding transforms,
   multimodal decode stubs).
+- PySpark's DataFrame origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``F.*``/Column call is wrapped to record its Python call site
+  in the JVM — about five py4j round trips per call (an active-session
+  lookup, a conf read, an origin set/clear pair) plus a Python stack
+  walk. A search builds its plan from hundreds of such calls: on a
+  4-core host the capture took building a warm indexed search's plan
+  from ~1,200 to ~2,700 py4j commands and added ~150 ms to a search of
+  ~1.4 s, all on the driver before any Spark job runs. What is lost is
+  the Python file and line in a DataFrame error's query context; the
+  JVM error itself (class, message, the failing expression) is
+  unchanged. PySpark caches the flag per process, read from the
+  session active at the first wrapped call, so it holds in processes
+  whose session comes from this factory; a caller's own session (such
+  as the ``__spark_entry__`` driver's) keeps PySpark's default.
 
 :func:`local_frame` is the one way small driver-built rows (query
 terms, PPR rank vectors, empty-table frames) enter a plan.
@@ -57,6 +72,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no per-call Python origin capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # 128 MB input splits: good default for wide parquet scans.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

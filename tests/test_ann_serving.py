@@ -221,8 +221,9 @@ def _python_rdd_scans(plan) -> int:
 
 
 def test_indexed_search_serving_cost(spark, tmp_path):
-    """A warm indexed search is one candidate-sheet plan: at most 12
-    Spark jobs, no persisted RDD, and no Python-evaluated input
+    """A warm indexed search is one candidate-sheet plan: at most 6
+    Spark jobs (the BM25 branch is one pass over the pruned postings),
+    no persisted RDD, and no Python-evaluated input
     anywhere in its plan (query terms and empty tables such as the
     absent feedback log enter as JVM LocalRelations)."""
     eng = MemoriesEngine(spark, str(tmp_path / "store"))
@@ -249,18 +250,61 @@ def test_indexed_search_serving_cost(spark, tmp_path):
     jobs = list(sc.statusTracker().getJobIdsForGroup("serving-cost"))
     try:
         assert len(rows) == 10
-        assert len(jobs) <= 12, f"{len(jobs)} Spark jobs for one search"
+        assert len(jobs) <= 6, f"{len(jobs)} Spark jobs for one search"
         assert set(sc._jsc.getPersistentRDDs().keys()) <= before
         assert _python_rdd_scans(df._jdf.queryExecution().executedPlan()) == 0
     finally:
         release_caches(df)
 
 
+def test_indexed_search_plan_build_cost(spark, tmp_path):
+    """Building a warm indexed search's plan (no action) stays within
+    a bounded number of py4j round trips. The session factory turns
+    PySpark's per-call DataFrame origin capture off — with it on,
+    every ``F.*``/Column call costs about five extra round trips, and
+    one warm plan build took ~2,700 commands against ~1,190 without."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    eng = MemoriesEngine(spark, str(tmp_path / "store"))
+    eng.add(_corpus(60), NOW)
+    eng.build_lexical_index()
+
+    def search():
+        return hybrid_search(eng, "cache subsystem policy item", k=10,
+                             auto_intent=False, now=NOW, lexical=True,
+                             graph_weight=0)
+
+    for _ in range(2):  # warm the snapshot
+        warm = search()
+        warm.collect()
+        release_caches(warm)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        # release notices of garbage-collected JVM references ride the
+        # same channel whenever Python's GC runs; they are not plan work
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        df = search()
+    finally:
+        client.send_command = send
+    release_caches(df)
+    assert len(sent) <= 1300, f"{len(sent)} py4j commands to build one search"
+
+
 def test_graph_search_serving_cost(spark, tmp_path):
     """A warm graph-path search (graph_weight > 0) over an indexed
     store with links: one collect of the direct rows, ONE collect of
     PPR's seed edge ball, and the <= k merged rows joined to the
-    snapshot — at most 21 Spark jobs. It persists no RDD, neither
+    snapshot — at most 17 Spark jobs. It persists no RDD, neither
     during the call nor after release, and has no Python-evaluated
     input in its plan (the merged rows are a JVM LocalRelation)."""
     eng = MemoriesEngine(spark, str(tmp_path / "store"))
@@ -292,7 +336,7 @@ def test_graph_search_serving_cost(spark, tmp_path):
     try:
         assert len(rows) == 10
         assert {r.match_type for r in rows} - {"direct"}  # the merge ran
-        assert len(jobs) <= 21, f"{len(jobs)} Spark jobs for one graph search"
+        assert len(jobs) <= 17, f"{len(jobs)} Spark jobs for one graph search"
         assert persisted() <= before  # nothing persisted by the call
         assert _python_rdd_scans(df._jdf.queryExecution().executedPlan()) == 0
     finally:

@@ -11,6 +11,7 @@ whenever the store mutated — results must be IDENTICAL either way.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -114,13 +115,37 @@ def test_fresh_index_plan_never_tokenizes_corpus(store):
 def test_postings_read_is_term_pruned(store):
     """The stats read carries the In(term) predicate down to the
     parquet scan (row-group pruning via the term-sorted layout), and
-    the per-doc lengths come from the PRUNED postings' denormalized
-    dl — never an O(corpus) doc_stats scan in the query path."""
+    the pruned postings carry each document's dl — never an O(corpus)
+    doc_stats scan in the query path. A warm indexed search scores
+    BM25 in one pass over that read: the postings are scanned once,
+    and no per-search distinct over (id, dl) derives the lengths."""
     stats = store.lexical_stats(["cache", "policy"])
-    plan = stats["terms"]._jdf.queryExecution().executedPlan().toString()
+    postings = stats["postings"]
+    plan = postings._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(term" in plan, plan
-    dplan = stats["doc_stats"]._jdf.queryExecution().executedPlan().toString()
-    assert "In(term" in dplan, dplan
+    assert postings.columns == ["id", "term", "tf", "dl"]
+    meta = store.lexical_index_meta()
+    assert {k: stats[k] for k in ("n", "a", "avgdl")} == {
+        k: meta[k] for k in ("n", "a", "avgdl")
+    }
+
+    def search():
+        return hybrid_search(store, "cache subsystem policy", k=5,
+                             auto_intent=False, now=NOW, lexical=True)
+
+    search().collect()  # warm the snapshot
+    df = search()
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"HashAggregate\(keys=\[id#\d+L, dl#", plan), plan
+    # the adaptive plan prints its final and initial plans; one scan
+    # keeps one set of output attributes in both
+    scans = {
+        line[line.index("FileScan"):].split("]")[0]
+        for line in plan.splitlines()
+        if "FileScan" in line and "_lexical_index" in line
+    }
+    assert len(scans) == 1, scans
 
 
 def test_prefix_or_archived_searches_fall_back(store):
@@ -278,7 +303,11 @@ def test_refresh_matches_fresh_build_and_inline(spark, tmp_path):
     build_term_stats, and serves the same BM25 (id, score), bit for
     bit: add, delete, text update, archive, a folder emptied, the
     whole store emptied and refilled, across folders whose names
-    Hive-escape. Every non-empty step exercises the epsilon floor."""
+    Hive-escape. Every non-empty step exercises the epsilon floor.
+    The query grid covers a repeated term (qtf 2), a term absent from
+    the vocabulary beside present ones, an all-absent query (zero
+    rows) and, at the emptied store, the empty index (n = 0,
+    a = None)."""
     from memories_spark.operators import bm25 as bm25_op
     from memories_spark.operators.lexical_index import build_lexical
 
@@ -287,6 +316,8 @@ def test_refresh_matches_fresh_build_and_inline(spark, tmp_path):
     eng.add(_parity_recs(folders * 4, 0), NOW)
     eng.build_lexical_index()
     q = ["cache", "cache", "policy", "rare3", "absent"]
+    grid = [q, ["queue", "queue", "note"], ["item", "nowhere"],
+            ["absent", "nowhere"]]
 
     def check(step):
         meta = eng.refresh_lexical_index()
@@ -302,21 +333,26 @@ def test_refresh_matches_fresh_build_and_inline(spark, tmp_path):
         for m in (meta, fresh):
             assert (float(m["n"]), m["avgdl"], m["a"]) == expected, (step, m)
         assert meta["folder_stats"] == fresh["folder_stats"], step
-        served = sorted(
-            (r.id, r.score) for r in bm25_op.bm25_scores(
-                docs, "id", "text", q, stats=eng.lexical_stats(q, meta=meta)
-            ).collect()
-        )
-        assert served == sorted(
-            (r.id, r.score)
-            for r in bm25_op.bm25_scores(docs, "id", "text", q).collect()
-        ), step
+        served = {}
+        for query in grid:
+            served[tuple(query)] = sorted(
+                (r.id, r.score) for r in bm25_op.bm25_scores(
+                    docs, "id", "text", query,
+                    stats=eng.lexical_stats(query, meta=meta),
+                ).collect()
+            )
+            assert served[tuple(query)] == sorted(
+                (r.id, r.score)
+                for r in bm25_op.bm25_scores(docs, "id", "text", query).collect()
+            ), (step, query)
+        assert served[("absent", "nowhere")] == [], step
         if row.n:
             floored = inline["raw_idf"].filter(F.col("raw_idf") < 0)
             assert floored.filter(F.col("term") == "cache").count() == 1, step
-            assert served, step
+            assert served[tuple(q)] and served[("queue", "queue", "note")], step
         else:
-            assert served == [], step
+            assert (meta["n"], meta["a"]) == (0, None), step
+            assert not any(served.values()), step
 
     check("build")
     ids = sorted(r.id for r in eng.table("memories").select("id").collect())
@@ -524,8 +560,10 @@ def test_refresh_never_disturbs_inflight_readers(spark, tmp_path):
     # does after its freshness check) but does not execute yet
     stats = eng.lexical_stats(["cache", "subsystem", "policy"])
     expected = sorted(
-        (int(r.id), r.term, int(r.tf)) for r in stats["terms"].collect()
+        (int(r.id), r.term, int(r.tf), int(r.dl))
+        for r in stats["postings"].collect()
     )
+    pinned = {k: stats[k] for k in ("n", "a", "avgdl")}
 
     # writer mutates and refreshes TWICE — the reader's generation is
     # retained for one publish, so the first refresh must leave it
@@ -534,14 +572,19 @@ def test_refresh_never_disturbs_inflight_readers(spark, tmp_path):
               "embedding": mock_embed("fresh cache fact")}], LATER)
     eng.refresh_lexical_index()
 
-    got = sorted((int(r.id), r.term, int(r.tf)) for r in stats["terms"].collect())
+    got = sorted(
+        (int(r.id), r.term, int(r.tf), int(r.dl))
+        for r in stats["postings"].collect()
+    )
     assert got == expected  # old generation: identical rows, no crash
-    idf_rows = stats["term_idf"].collect()  # globals still consistent
-    assert idf_rows and all(r.idf is not None for r in idf_rows)
+    # the reader's scalars stay those of its own generation
+    assert {k: stats[k] for k in ("n", "a", "avgdl")} == pinned
+    assert stats["n"] == 60 and stats["a"] is not None
 
     # and a NEW reader sees the refreshed corpus
     fresh = eng.lexical_stats(["fresh"])
-    assert fresh["terms"].count() >= 1
+    assert fresh["postings"].count() >= 1
+    assert fresh["n"] == 61
 
 
 def test_generations_are_garbage_collected(spark, tmp_path):
