@@ -8,13 +8,14 @@ by ``eps * average_idf`` with eps=0.25, where ``average_idf`` is the
 mean IDF over the whole vocabulary (including the negatives).
 
 Scale design: the reference rebuilds BM25 over the full corpus on
-every write — O(N) per write. Here the term statistics are derived
-DataFrames (``terms``, ``doc_stats``, corpus scalars) produced by one
-shuffle each and joinable against any query set. At 100 TB the
-``terms`` table is the big one; it partitions by term for the
-df-aggregation and the query join is a broadcast of the (tiny) query
-term list — no full-corpus pass per query, and incremental
-maintenance is a MERGE of term deltas instead of a rebuild.
+every write — O(N) per write. Here the term statistics are either
+derived inline (:func:`build_term_stats`: ``terms``, ``doc_stats``,
+corpus scalars, one shuffle each, joinable against any query set) or
+read from the persisted lexical index (``operators/lexical_index.py``:
+term-sorted postings pruned to the query terms, plus the corpus
+scalars its meta pins), which is refreshed per changed folder instead
+of rebuilt. :func:`bm25_scores` scores both shapes with one
+fixed-point contribution.
 """
 
 from __future__ import annotations
@@ -96,8 +97,8 @@ def build_term_stats(docs: DataFrame, id_col: str, text_col: str) -> dict[str, D
     ``corpus``'s N/avgdl).
 
     Returns ``terms(id, term, tf)``, ``doc_stats(id, dl)``,
-    ``corpus(n, avgdl)``, ``term_idf(term, idf)`` (epsilon-floored,
-    vocabulary-wide), ``raw_idf(term, raw_idf)`` and ``avg_idf(a)``.
+    ``corpus(n, avgdl)``, ``raw_idf(term, raw_idf)`` (unfloored,
+    vocabulary-wide) and ``avg_idf(a)``.
     """
     terms = tokenize_terms(docs, id_col, text_col)
     doc_stats = docs.select(
@@ -115,22 +116,11 @@ def build_term_stats(docs: DataFrame, id_col: str, text_col: str) -> dict[str, D
         "term", raw_idf(F.col("n"), F.col("df")).alias("raw_idf")
     )
     avg_idf = with_idf.agg(avg_raw_idf(F.col("raw_idf")).alias("a"))
-    term_idf = with_idf.crossJoin(F.broadcast(avg_idf)).select(
-        "term", floor_idf(F.col("raw_idf"), F.col("a")).alias("idf")
-    )
-    # raw_idf/avg_idf are exported so the INLINE scoring path can
-    # apply the epsilon floor per posting row instead of joining the
-    # pre-floored vocabulary table: the floor is when(raw < 0, eps*a,
-    # raw) either way (bit-identical), but deferring it takes the
-    # vocabulary-mean aggregation OFF the scoring join's critical
-    # path — avg_idf becomes a sibling broadcast branch that overlaps
-    # with the postings join instead of gating it (guide §2.6: the
-    # broadcast-exchange future runs concurrently). The registry's
-    # persisted term-stats index stores term_idf (its on-disk layout).
+    # unfloored: bm25_scores applies the epsilon floor per
+    # contribution row (see its inline branch)
     return {
         "terms": terms,
         "doc_stats": doc_stats,
-        "term_idf": term_idf,
         "corpus": corpus,
         "raw_idf": with_idf,
         "avg_idf": avg_idf,
@@ -150,16 +140,14 @@ def bm25_scores(
     fixed-point sum (order-independent across engines/partitionings).
     Query term multiplicity counts, like rank_bm25's per-token loop.
 
-    ``stats`` comes in three shapes, all scored by the one
-    fixed-point contribution below:
+    ``stats`` comes in two shapes, both scored by the one fixed-point
+    contribution below:
 
     - inline (:func:`build_term_stats`, the default): the query-term
       list joins the vocabulary's raw IDF first, the result
       broadcasts into the posting join, and the epsilon floor is
       applied per contribution row;
-    - the registry's persisted term-stats tables (``terms``,
-      ``doc_stats``, ``corpus``, pre-floored ``term_idf``);
-    - the engine's lexical index (:func:`lexical_index.query_stats`):
+    - the persisted lexical index (:func:`lexical_index.query_stats`):
       the term-pruned ``postings(id, term, tf, dl)`` frame plus the
       generation's scalars ``n``, ``a`` and ``avgdl``.
 
@@ -190,28 +178,20 @@ def bm25_scores(
         idf = floor_idf(raw, F.lit(stats["a"]))
         avgdl = F.lit(stats["avgdl"])
     else:
-        if "raw_idf" in stats:
-            # Inline stats: floor the IDF per contribution row instead
-            # of a pre-floored vocabulary join — when(raw < 0, eps*a,
-            # raw) is the identical expression, but the vocabulary-mean
-            # branch (avg_idf) broadcasts into the FINAL projection
-            # rather than gating the query-term join, so the two
-            # full-vocabulary aggregations overlap with the postings
-            # join instead of running serially ahead of it.
-            qidf = stats["raw_idf"].join(F.broadcast(qcount), "term")
-            idf = floor_idf(F.col("raw_idf"), F.col("a"))
-            scalars = [stats["corpus"].select("avgdl"), stats["avg_idf"]]
-        else:
-            # the registry's persisted term_idf is already floored and
-            # pruned to the query terms
-            qidf = stats["term_idf"].join(F.broadcast(qcount), "term")
-            idf = F.col("idf")
-            scalars = [stats["corpus"].select("avgdl")]
-        contrib = stats["terms"].join(F.broadcast(qidf), "term").join(
-            stats["doc_stats"], "id"
+        # Inline stats: floor the IDF per contribution row instead of
+        # a pre-floored vocabulary join — the vocabulary-mean branch
+        # (avg_idf) broadcasts into the FINAL projection rather than
+        # gating the query-term join, so the two full-vocabulary
+        # aggregations overlap with the postings join instead of
+        # running serially ahead of it.
+        qidf = stats["raw_idf"].join(F.broadcast(qcount), "term")
+        contrib = (
+            stats["terms"].join(F.broadcast(qidf), "term")
+            .join(stats["doc_stats"], "id")
+            .crossJoin(F.broadcast(stats["corpus"].select("avgdl")))
+            .crossJoin(F.broadcast(stats["avg_idf"]))
         )
-        for one_row in scalars:
-            contrib = contrib.crossJoin(F.broadcast(one_row))
+        idf = floor_idf(F.col("raw_idf"), F.col("a"))
         avgdl = F.col("avgdl")
 
     contrib = contrib.select(

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from memories_spark.functions.decay import decay_sql, half_life_decay
+from memories_spark.functions.hashing import unfix
 from memories_spark.functions.vectors import cosine_expr, cosine_sql
 from memories_spark.operators import bm25 as bm25_op
 from memories_spark.operators import graph as graph_op
@@ -404,14 +405,14 @@ def batch_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm_ranked = _bm_ranked(docs, limit=20).select(F.col("id").alias("doc_id"), "rank")
     qb = queries.select("query_id").crossJoin(bm_ranked)
 
-    contrib = lambda rank, w: F.round(  # noqa: E731
-        (F.lit(w) / (rank + F.lit(rrf_op.RRF_K)).cast("double"))
-        * F.lit(float(10**rrf_op.SCORE_SCALE))
-    ).cast("long")
-    v = vec_ranked.select("query_id", "doc_id", contrib(F.col("rank"), 0.7).alias("c"),
-                          F.col("rank").alias("rank"), F.lit(0).alias("_sig"))
-    b = qb.select("query_id", "doc_id", contrib(F.col("rank"), 0.3).alias("c"),
-                  F.col("rank").alias("rank"), F.lit(1).alias("_sig"))
+    v = vec_ranked.select(
+        "query_id", "doc_id", rrf_op.rrf_contrib(F.col("rank"), 0.7).alias("c"),
+        "rank", F.lit(0).alias("_sig"),
+    )
+    b = qb.select(
+        "query_id", "doc_id", rrf_op.rrf_contrib(F.col("rank"), 0.3).alias("c"),
+        "rank", F.lit(1).alias("_sig"),
+    )
     # Fuse via union + ONE groupBy instead of a full-outer join (the
     # rrf_fuse equivalence: sum-of-present == coalesce chain, max over
     # a tagged rank == the join's rank column, absent side == NULL),
@@ -437,9 +438,7 @@ def batch_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "doc_id",
-            F.round(F.col("c").cast("double") / F.lit(float(10**rrf_op.SCORE_SCALE)), 6).alias(
-                "rrf_score"
-            ),
+            F.round(unfix(F.col("c"), rrf_op.SCORE_SCALE), 6).alias("rrf_score"),
             F.col("vector_rank").cast("long").alias("vector_rank"),
             F.col("bm25_rank").cast("long").alias("bm25_rank"),
         )

@@ -558,6 +558,21 @@ def recency_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_QUERY = ["spark", "join", "filter", "window", "group"]
 
 
+def _bm25_topk_plan(
+    spark: SparkSession, sf_dir: str, stats: dict | None = None
+) -> DataFrame:
+    """BM25 top-20, shared by ``bm25_topk`` and its ``_indexed`` twin:
+    ``stats`` None tokenizes the corpus inline, the lexical index's
+    :func:`_lexical_stats` serves the same scores from pruned postings."""
+    docs = load_tables(spark, sf_dir)["documents"]
+    scored = bm25_op.bm25_scores(docs, "doc_id", "text", _BM25_QUERY, stats=stats)
+    return (
+        scored.select(F.col("id").alias("doc_id"), F.round("score", 6).alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(20)
+    )
+
+
 @register(
     "bm25_topk",
     oracle=bm25_op.bm25_sql("documents", "doc_id", "text", _BM25_QUERY, k=20),
@@ -567,13 +582,7 @@ _BM25_QUERY = ["spark", "join", "filter", "window", "group"]
     tags=("retrieval", "bm25"),
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir)["documents"]
-    scored = bm25_op.bm25_scores(docs, "doc_id", "text", _BM25_QUERY)
-    return (
-        scored.select(F.col("id").alias("doc_id"), F.round("score", 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
+    return _bm25_topk_plan(spark, sf_dir)
 
 
 _KNN_QUERY_IDS = [0, 7, 42]
@@ -644,9 +653,9 @@ def _hybrid_rrf_plan(
 ) -> DataFrame:
     """The flagship hybrid plan, shared by ``hybrid_rrf_search`` and
     its ``_indexed`` twin. ``bm_stats`` is the ONLY difference between
-    the two entries: None tokenizes the corpus inline; a persisted
-    term-stats dict serves the BM25 branch from pruned postings
-    reads. They share one oracle, so sharing the builder makes
+    the two entries: None tokenizes the corpus inline; the lexical
+    index's :func:`_lexical_stats` serves the BM25 branch from pruned
+    postings reads. They share one oracle, so sharing the builder makes
     result-identity true by construction — a weights/oversample/
     tie-break tweak cannot drift one without the other."""
     t = load_tables(spark, sf_dir)
@@ -665,12 +674,7 @@ def _hybrid_rrf_plan(
     )
     vec_ranked = rrf_op.rank_signal(vec_scored, "id", "sim", limit=30)
 
-    if bm_stats is None:
-        bm = bm25_op.bm25_scores(docs, "doc_id", "text", _BM25_QUERY)
-    else:
-        bm = bm25_op.bm25_scores(
-            bm_stats["doc_stats"], "doc_id", "text", _BM25_QUERY, stats=bm_stats
-        )
+    bm = bm25_op.bm25_scores(docs, "doc_id", "text", _BM25_QUERY, stats=bm_stats)
     bm_ranked = rrf_op.rank_signal(bm, "id", "score", limit=30)
 
     fused = rrf_op.rrf_fuse(
@@ -698,81 +702,47 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hybrid_rrf_plan(spark, sf_dir)
 
 
+def _lexical_stats(spark: SparkSession, sf_dir: str) -> dict:
+    """BM25 stats for the query terms, read from the documents'
+    persisted lexical index (``operators/lexical_index.py``, the
+    engine's own format), built once per corpus fingerprint. One build
+    serves both indexed entries."""
+    from memories_spark.operators import lexical_index
+    from memories_spark.plans.queries_ann import _ensure_index
+
+    def build(tmp: str) -> None:
+        docs = load_tables(spark, sf_dir)["documents"]
+        lexical_index.build_lexical(spark, docs, "doc_id", "text", tmp)
+
+    idx = _ensure_index("lexical", sf_dir, build, table="documents.parquet")
+    meta = lexical_index.read_meta(idx)
+    return lexical_index.query_stats(
+        spark, lexical_index.table_root(idx, meta), meta, _BM25_QUERY
+    )
+
+
 @register(
     "bm25_topk_indexed",
     oracle=bm25_op.bm25_sql("documents", "doc_id", "text", _BM25_QUERY, k=20),
     bench=True,
-    doc="BM25 top-k served from a PERSISTED term-statistics index — "
-    "the same hoist the ANN family got (queries_ann 'Persisted ANN "
-    "index builds'): tokenize/DF/IDF are query-independent, so they "
-    "build once per corpus fingerprint and queries read back only "
-    "the query terms' postings (the terms table is written "
-    "range-partitioned and sorted by term, so an In(term) predicate "
-    "prunes files and row groups via parquet min/max stats — at "
-    "100 TB a 5-term query touches a handful of row groups, not the "
-    "corpus). The reference instead rebuilds BM25 on every write "
-    "(memory_engine.py:224-232, the SURVEY §4 'incremental vs full "
-    "rebuild' gap); the incremental maintenance path for this index "
-    "is streaming/events.py incremental_term_stats_sink + "
-    "compact_term_stats. Results are identical to bm25_topk by "
-    "construction (same exact fixed-point math, same oracle).",
+    doc="BM25 top-k served from the PERSISTED lexical index "
+    "(operators/lexical_index.py, the index hybrid_search(lexical=True) "
+    "serves from) — the same hoist the ANN family got (queries_ann "
+    "'Persisted ANN index builds'): tokenize/DF/IDF are "
+    "query-independent, so they build once per corpus fingerprint and "
+    "queries read back only the query terms' postings (written sorted "
+    "by term, so an In(term) predicate prunes row groups via parquet "
+    "min/max stats — at 100 TB a 5-term query touches a handful of row "
+    "groups, not the corpus). The reference instead rebuilds BM25 on "
+    "every write (memory_engine.py:224-232, the SURVEY §4 'incremental "
+    "vs full rebuild' gap); this index's incremental maintenance path "
+    "is lexical_index.refresh_lexical. Results are identical to "
+    "bm25_topk by construction (same exact fixed-point math, same "
+    "oracle).",
     tags=("retrieval", "bm25", "index"),
 )
 def bm25_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from memories_spark.plans.queries_ann import _ensure_index
-
-    idx = _ensure_index(
-        "bm25", sf_dir, _bm25_index_builder(spark, sf_dir), table="documents.parquet"
-    )
-    stats = _read_bm25_index(spark, idx)
-    scored = bm25_op.bm25_scores(
-        stats["doc_stats"], "doc_id", "text", _BM25_QUERY, stats=stats
-    )
-    return (
-        scored.select(F.col("id").alias("doc_id"), F.round("score", 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
-
-
-def _bm25_index_builder(spark: SparkSession, sf_dir: str):
-    """Builder for the shared 'bm25' persisted term-stats index —
-    postings range-partitioned + term-sorted for file- and row-group
-    pruning of term-predicate reads. One build serves both
-    bm25_topk_indexed and hybrid_rrf_search_indexed."""
-    import os as _os
-
-    def _build(tmp: str) -> None:
-        docs = load_tables(spark, sf_dir)["documents"]
-        stats = bm25_op.build_term_stats(docs, "doc_id", "text")
-        stats["terms"].repartitionByRange(8, "term").sortWithinPartitions(
-            "term"
-        ).write.parquet(_os.path.join(tmp, "terms"))
-        stats["doc_stats"].coalesce(1).write.parquet(_os.path.join(tmp, "doc_stats"))
-        stats["corpus"].coalesce(1).write.parquet(_os.path.join(tmp, "corpus"))
-        stats["term_idf"].repartitionByRange(4, "term").sortWithinPartitions(
-            "term"
-        ).write.parquet(_os.path.join(tmp, "term_idf"))
-
-    return _build
-
-
-def _read_bm25_index(spark: SparkSession, idx: str) -> dict:
-    """Query-term-pruned reads of the persisted term-stats index."""
-    import os as _os
-
-    from memories_spark.sources.tables import read_parquet_memoized
-
-    return {
-        "terms": read_parquet_memoized(spark, _os.path.join(idx, "terms")).filter(
-            F.col("term").isin(_BM25_QUERY)
-        ),
-        "doc_stats": read_parquet_memoized(spark, _os.path.join(idx, "doc_stats")),
-        "corpus": read_parquet_memoized(spark, _os.path.join(idx, "corpus")),
-        "term_idf": read_parquet_memoized(spark, _os.path.join(idx, "term_idf")).filter(
-            F.col("term").isin(_BM25_QUERY)
-        ),
-    }
+    return _bm25_topk_plan(spark, sf_dir, stats=_lexical_stats(spark, sf_dir))
 
 
 @register(
@@ -780,23 +750,17 @@ def _read_bm25_index(spark: SparkSession, idx: str) -> dict:
     oracle=_hybrid_oracle(),
     bench=True,
     doc="The flagship hybrid query with its BM25 branch served from "
-    "the PERSISTED term-statistics index (the engine-level twin is "
-    "hybrid_search(lexical=True) over operators/lexical_index.py): "
-    "identical results to hybrid_rrf_search by construction — same "
-    "fixed-point math, same oracle — but the lexical branch reads "
-    "only the query terms' postings via In(term) row-group pruning "
-    "instead of tokenizing the corpus per query. The reference keeps "
-    "its BM25 index persistent between queries "
-    "(memory_engine.py:224-232); this entry pins the hybrid stack's "
-    "serve-time cost drop in the bench, drift-guarded like the ANN "
-    "family.",
+    "the PERSISTED lexical index (operators/lexical_index.py, the one "
+    "hybrid_search(lexical=True) serves from; maintained by "
+    "lexical_index.refresh_lexical): identical results to "
+    "hybrid_rrf_search by construction — same fixed-point math, same "
+    "oracle — but the lexical branch reads only the query terms' "
+    "postings via In(term) row-group pruning instead of tokenizing "
+    "the corpus per query. The reference keeps its BM25 index "
+    "persistent between queries (memory_engine.py:224-232); this "
+    "entry pins the hybrid stack's serve-time cost drop in the bench, "
+    "drift-guarded like the ANN family.",
     tags=("retrieval", "rrf", "bm25", "index"),
 )
 def hybrid_rrf_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from memories_spark.plans.queries_ann import _ensure_index
-
-    # shared "bm25" index key: one build serves both indexed entries
-    idx = _ensure_index(
-        "bm25", sf_dir, _bm25_index_builder(spark, sf_dir), table="documents.parquet"
-    )
-    return _hybrid_rrf_plan(spark, sf_dir, bm_stats=_read_bm25_index(spark, idx))
+    return _hybrid_rrf_plan(spark, sf_dir, bm_stats=_lexical_stats(spark, sf_dir))

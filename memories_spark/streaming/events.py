@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from memories_spark.functions.texttools import tokens_expr
+from memories_spark.operators import bm25 as bm25_op
 
 
 def start_in_streaming_pool(writer):
@@ -224,13 +224,7 @@ def incremental_term_stats_sink(
     bounded.
     """
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        terms = (
-            batch.select(
-                F.col("doc_id").alias("id"), F.explode(tokens_expr("text")).alias("term")
-            )
-            .groupBy("id", "term")
-            .agg(F.count("*").alias("tf"))
-        )
+        terms = bm25_op.tokenize_terms(batch, "doc_id", "text")
         terms.write.mode("append").parquet(stats_dir)
 
     return start_in_streaming_pool(

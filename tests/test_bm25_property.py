@@ -4,7 +4,8 @@ pure-Python implementation of rank_bm25 0.2.2's BM25Okapi formula
 pyproject.toml:17) on random tiny corpora.
 
 The oracle-parity suite pins Spark == DuckDB on fixed corpora; this
-suite pins both == the published formula, including the edge cases
+suite pins both == the published formula, for inline stats and for
+the persisted lexical index alike, including the edge cases
 hypothesis likes: every-doc-contains-the-term (negative IDF -> the
 epsilon * average-IDF floor), repeated query terms (multiplicity
 counts), and single-doc corpora.
@@ -13,11 +14,14 @@ counts), and single-doc corpora.
 from __future__ import annotations
 
 import math
+import uuid
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from memories_spark.operators import bm25 as bm25_op
+from memories_spark.operators import lexical_index
+from memories_spark.session import local_frame
 
 VOCAB = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
 
@@ -71,14 +75,29 @@ def okapi_reference(corpus: list[list[str]], query: list[str]) -> dict[int, floa
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(corpus=corpus_strategy, query=query_strategy)
-def test_bm25_matches_published_formula(spark, corpus, query):
-    docs = spark.createDataFrame(
-        [(i, " ".join(doc)) for i, doc in enumerate(corpus)], "doc_id long, text string"
+def test_bm25_matches_published_formula(spark, tmp_path, corpus, query):
+    """Both stats shapes of ``bm25_scores`` — inline, and the persisted
+    lexical index read back through ``query_stats`` — give the same
+    rows bit for bit, and both match the published formula."""
+    # one JVM-local frame feeds both paths: a Python-parallelized one
+    # would respawn Python tasks in every stage of both plans
+    docs = local_frame(
+        spark, [(i, " ".join(doc)) for i, doc in enumerate(corpus)], "doc_id long, text string"
     )
     got = {
         r["id"]: r["score"]
         for r in bm25_op.bm25_scores(docs, "doc_id", "text", query).collect()
     }
+    idx = str(tmp_path / uuid.uuid4().hex[:8])
+    meta = lexical_index.build_lexical(spark, docs, "doc_id", "text", idx)
+    stats = lexical_index.query_stats(
+        spark, lexical_index.table_root(idx, meta), meta, query
+    )
+    indexed = {
+        r["id"]: r["score"]
+        for r in bm25_op.bm25_scores(docs, "doc_id", "text", query, stats=stats).collect()
+    }
+    assert indexed == got
     want = okapi_reference(corpus, query)
     # the operator only emits docs containing >=1 query term
     for i, s in want.items():

@@ -885,6 +885,32 @@ def test_taxonomy_tagging_broadcasts_dictionary(spark, sf_dir):
     assert "WindowGroupLimit" in p, p
 
 
+def _parquet_scans(p: str) -> list[tuple[str, str]]:
+    """(location, pushed filters) of every parquet scan in a formatted
+    plan."""
+    out = []
+    for sec in p.split("Scan parquet")[1:]:
+        sec = sec.split("\n\n")[0]
+        loc = re.search(r"Location: [^\[]*\[([^\]]*)\]", sec)
+        if loc:  # the tree overview names scans without details
+            pushed = re.search(r"PushedFilters: \[(.*)\]", sec)
+            out.append((loc.group(1), pushed.group(1) if pushed else ""))
+    return out
+
+
+def _assert_reads_lexical_index(p: str) -> None:
+    """The query terms' BM25 stats come from one lexical-index
+    generation's postings, with In(term) pushed into that scan, and
+    no term-stats table of another layout is read."""
+    scans = _parquet_scans(p)
+    pushed = [loc for loc, f in scans if "In(term" in f]
+    assert pushed, scans
+    for loc in pushed:
+        assert re.search(r"/g-[0-9a-f]+/postings$", loc), scans
+    for loc, _ in scans:
+        assert not re.search(r"/(term_idf|doc_stats)(/|$)", loc), scans
+
+
 def test_bm25_indexed_pushes_term_filter(spark, sf_dir):
     """The indexed BM25 serving path must push the query-term
     predicate into the persisted postings scan (file/row-group
@@ -892,6 +918,7 @@ def test_bm25_indexed_pushes_term_filter(spark, sf_dir):
     is reading the whole postings table per query."""
     p = plan(QUERIES["bm25_topk_indexed"].fn(spark, sf_dir))
     assert "PushedFilters" in p and "In(term" in p, p
+    _assert_reads_lexical_index(p)
 
 
 def test_hybrid_indexed_never_tokenizes_corpus(spark, sf_dir):
@@ -901,6 +928,7 @@ def test_hybrid_indexed_never_tokenizes_corpus(spark, sf_dir):
     stage) — the whole point of the persisted index."""
     p = plan(QUERIES["hybrid_rrf_search_indexed"].fn(spark, sf_dir))
     assert "PushedFilters" in p and "In(term" in p, p
+    _assert_reads_lexical_index(p)
     assert "split(lower(trim(text" not in p, p
     # the inline flagship DOES tokenize — the gate discriminates
     p_inline = plan(QUERIES["hybrid_rrf_search"].fn(spark, sf_dir))
